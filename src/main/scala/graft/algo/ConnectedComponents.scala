@@ -116,7 +116,7 @@ object ConnectedComponents {
         col("vid"),
         least(col("component"), coalesce(col("m"), col("component"))).as("component"),
         (coalesce(col("m"), col("component")) < col("component")).as("active"))
-    } { next => next.where(col("active")).count() }
+    }(graft.core.IterativeRunner.CountTrue("active"))
     sym.unpersist(false)
     res.state.select("vid", "component")
   }

@@ -51,7 +51,7 @@ object KCore {
         col("vid"),
         (col("alive") && coalesce(col("deg"), lit(0L)) >= k).as("alive"),
         (col("alive") && coalesce(col("deg"), lit(0L)) < k).as("removed"))
-    } { next => next.where(col("removed")).count() }
+    }(graft.core.IterativeRunner.CountTrue("removed"))
 
     val core = survivorDegrees(res.state.where(col("alive")))
       .select(col("vid"), col("deg").as("core_degree"))

@@ -53,8 +53,7 @@ object PageRank {
     * the big cached side is two longs per edge. (Int32 vid packing was
     * A/B-measured on the 337M-edge pair and is ~6% SLOWER at both 8 and 32
     * cores — the columnar cache already compresses long vids, and the casts
-    * cost more than the width saves; see BASELINE.md §c round 2 and
-    * IterCache.byKeyPacked.) Every superstep reuses this exchange; only the
+    * cost more than the width saves; see BASELINE.md §c round 2.) Every superstep reuses this exchange; only the
     * vertex-sized rank table moves. */
   /** Round-6: partition count derived from the symmetrized edge count
     * ([[graft.core.IterCache.adaptiveParts]]) instead of the session
@@ -93,7 +92,7 @@ object PageRank {
     val res = IterativeRunner.loop(initState(sym, vertices), maxIter,
       checkpointer = checkpointer, shuffleParts = Some(parts)) {
       (state, _) => step(sym, state, resetProb, tol)
-    } { next => next.where(col("active")).count() }
+    }(IterativeRunner.CountTrue("active"))
     sym.unpersist(false)
     Result(res.state.select("vid", "pr"), res.iterations, res.metrics)
   }

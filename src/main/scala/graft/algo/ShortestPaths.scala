@@ -58,7 +58,7 @@ object ShortestPaths {
         least(col("dist"), col("cand")).as("dist"), // least skips nulls
         (col("cand").isNotNull &&
           (col("dist").isNull || col("cand") < col("dist"))).as("active"))
-    } { next => next.where(col("active")).count() }
+    }(graft.core.IterativeRunner.CountTrue("active"))
 
     val out = res.state
       .select(col("vid"), coalesce(col("dist"), lit(-1L)).as("dist"))
@@ -103,7 +103,7 @@ object ShortestPaths {
         least(col("dist"), col("cand")).as("dist"),
         (col("cand").isNotNull &&
           (col("dist").isNull || col("cand") < col("dist"))).as("active"))
-    } { next => next.where(col("active")).count() }
+    }(graft.core.IterativeRunner.CountTrue("active"))
 
     val out = res.state.select(col("vid"), col("lm"), col("dist")).localCheckpoint(false)
     sym.unpersist(false)

@@ -50,8 +50,10 @@ object IterCache {
   def adaptiveParts(spark: org.apache.spark.sql.SparkSession, rows: Long): Int = {
     val cores = math.max(1, spark.sparkContext.defaultParallelism).toLong
     val r = math.max(0L, rows)
-    val byThroughput = (r + targetRowsPerPartition - 1) / targetRowsPerPartition
-    val fill = math.min(cores, (r + minRowsPerTask - 1) / minRowsPerTask)
+    // ceiling divisions that cannot overflow for a saturated estimate
+    def ceilDiv(n: Long, d: Long) = n / d + (if (n % d == 0) 0L else 1L)
+    val byThroughput = ceilDiv(r, targetRowsPerPartition)
+    val fill = math.min(cores, ceilDiv(r, minRowsPerTask))
     math.max(1L, math.min(cores * 8L, math.max(byThroughput, fill))).toInt
   }
 
@@ -134,28 +136,5 @@ object IterCache {
     val leaf = df.localCheckpoint(true, StorageLevel.DISK_ONLY)
     val parts = adaptiveParts(leaf.sparkSession, leaf.count())
     (leaf.repartition(parts, col(key)).persist(), parts)
-  }
-
-  /** [[byKey]] + downcast the given long id columns to int when the observed
-    * id space fits in int32. MEASURED NEGATIVE on this workload: the round-2
-    * A/B on the 337M-edge superstep (`ScalingBench`, packed vs unpacked at 8
-    * and 32 cores) showed int packing ~6% SLOWER at both levels with
-    * identical 8→32 efficiency — the columnar cache already compresses long
-    * vids, so the casts cost more than the width saves (BASELINE.md §c).
-    * Kept as the documented experiment + for callers whose cached side is
-    * NOT behind a columnar cache. Returns (cached frame, packed?). */
-  def byKeyPacked(df: DataFrame, key: String, idCols: Seq[String]): (DataFrame, Boolean) = {
-    import org.apache.spark.sql.functions.{greatest, least, max, min}
-    val leaf = df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-    val bounds = leaf.agg(
-      min(least(idCols.map(col): _*)).as("mn"),
-      max(greatest(idCols.map(col): _*)).as("mx")).head()
-    val pack = !bounds.isNullAt(0) &&
-      bounds.getLong(0) > Int.MinValue.toLong && bounds.getLong(1) < Int.MaxValue.toLong
-    val typed =
-      if (pack) leaf.select(leaf.columns.map(c =>
-        if (idCols.contains(c)) col(c).cast("int").as(c) else col(c)): _*)
-      else leaf
-    (typed.repartition(col(key)).persist(), pack)
   }
 }

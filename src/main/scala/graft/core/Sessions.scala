@@ -23,9 +23,19 @@ object Sessions {
     * cluster-resource settings, so they are safe either way. */
   def localBuilder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
+    if (!sys.props.contains(CodegenCacheKey)) b.config(CodegenCacheKey, CodegenCacheEntries)
     if (externallyManaged) {
       println(s"[sessions] deferring to injected spark.master=${sys.props("spark.master")}")
       b
     } else b.master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
   }
+
+  /** Generated-class cache size (a static, JVM-wide setting; a launcher's
+    * value wins). Spark's default of 100 entries, in 4 LRU segments, is
+    * smaller than the 65-95 distinct classes one graft operation generates,
+    * so a repeated operation in a long-lived session (streaming
+    * `foreachBatch`, a service) recompiled 45-70 of them; with 1000 a
+    * repeat compiles none. */
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  private val CodegenCacheEntries = 1000L
 }

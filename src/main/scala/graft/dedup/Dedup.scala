@@ -237,16 +237,26 @@ object Dedup {
     // the distinct-pair bound so the verify join is not over-partitioned on
     // corpora where near-identical docs collide in most bands (round-6
     // review finding)
-    val distinctCap =
-      if (nDocs < Int.MaxValue.toLong) nDocs * (nDocs - 1L) / 2L else Long.MaxValue
     val inter = exactInter(candidates, sh, sizes,
-      interRowsEst = Some(math.min(candRows, distinctCap) * (shRows / nDocs + 1L)))
+      interRowsEst = Some(verifyRowsEstimate(candRows, nDocs, shRows)))
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
+  }
+
+  /** Row estimate for the LSH verify join: candidate pairs, capped by the
+    * distinct-pair bound, times the average shingles per doc. The product
+    * saturates at Long.MaxValue: at 10^12-scale counts it overflows, and a
+    * wrapped negative estimate would size the join to one partition. */
+  private[graft] def verifyRowsEstimate(candRows: Long, nDocs: Long, shRows: Long): Long = {
+    val distinctCap =
+      if (nDocs < Int.MaxValue.toLong) nDocs * (nDocs - 1L) / 2L else Long.MaxValue
+    val pairs = math.min(candRows, distinctCap)
+    val perPair = shRows / nDocs + 1L
+    if (pairs > Long.MaxValue / perPair) Long.MaxValue else pairs * perPair
   }
 
   /** End-to-end near-dup clustering — the production dedup flow composed

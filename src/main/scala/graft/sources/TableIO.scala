@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Storage seam (SURVEY.md §7): algorithm code never names a format. In
   * production the implementation is the Iceberg catalog (`format("iceberg")`
@@ -14,11 +15,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * schemas either way: the Iceberg swap is configuration, not code.
   */
 trait TableIO {
-  /** Write data files without committing (invisible to readers-of-committed). */
+  /** Write data files and the table's schema without committing (invisible
+    * to readers-of-committed). */
   def writeData(df: DataFrame, table: String): Unit
   /** Publish a previously written table (marker + manifest append — last). */
   def commit(table: String): Unit
   final def write(df: DataFrame, table: String): Unit = { writeData(df, table); commit(table) }
+  /** Reads a table with the schema recorded at write time, or with an
+    * inferred one when none was recorded. */
   def read(spark: SparkSession, table: String): DataFrame
   def exists(table: String): Boolean
   /** Committed snapshot names under a table prefix (e.g. iteration dirs). */
@@ -29,8 +33,15 @@ final class ParquetDirTableIO(root: String) extends TableIO {
 
   private def dir(table: String) = s"$root/$table"
 
-  override def writeData(df: DataFrame, table: String): Unit =
+  /** The table's schema as JSON; the leading underscore keeps it out of the
+    * data files a parquet read lists. Reading with it skips parquet's
+    * schema-inference job (a footer read per table). */
+  private def schemaFile(table: String) = Paths.get(dir(table), "_schema.json")
+
+  override def writeData(df: DataFrame, table: String): Unit = {
     df.write.mode("overwrite").parquet(dir(table))
+    Files.write(schemaFile(table), df.schema.json.getBytes(StandardCharsets.UTF_8))
+  }
 
   override def commit(table: String): Unit = {
     val manifest = Paths.get(root, "_manifest.jsonl")
@@ -40,8 +51,14 @@ final class ParquetDirTableIO(root: String) extends TableIO {
     Files.write(Paths.get(dir(table), "_COMMITTED"), Array.emptyByteArray)
   }
 
-  override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(dir(table))
+  override def read(spark: SparkSession, table: String): DataFrame = {
+    val f = schemaFile(table)
+    if (!Files.exists(f)) spark.read.parquet(dir(table))
+    else spark.read
+      .schema(DataType.fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
+        .asInstanceOf[StructType])
+      .parquet(dir(table))
+  }
 
   override def exists(table: String): Boolean =
     Files.exists(Paths.get(dir(table), "_COMMITTED"))

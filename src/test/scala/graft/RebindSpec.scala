@@ -1,0 +1,153 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions._
+
+import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, ShortestPaths}
+import graft.core.{Checkpointer, IterCache, IterMetrics, IterativeRunner}
+import graft.dedup.Dedup
+
+/** Plan once, rebind per superstep: every loop gives bit-identical results
+  * whether supersteps rebind the cached plan or are planned afresh, and the
+  * supersteps that cannot rebind (an in-step checkpoint leaf, a plan-shape
+  * switch) fall back to planning. */
+class RebindSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private def edges = GraphFixture.graph.edges
+  private def vertices = GraphFixture.graph.vertices
+  private def landmarks = vertices.where(col("kind") === "tool" && pmod(col("vid"), lit(7L)) === 0L)
+    .select("vid")
+
+  /** Rows in a canonical order, doubles by their bits. */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    }).sortBy(_.mkString(","))
+
+  /** Runs `body` with the given planning mode; returns its result and the
+    * metrics of every superstep it ran. */
+  private def arm[T](rebind: Boolean)(body: => T): (T, Seq[IterMetrics]) = {
+    val seen = mutable.ArrayBuffer.empty[IterMetrics]
+    val out = IterativeRunner.rebind.withValue(rebind) {
+      IterativeRunner.onSuperstep.withValue(m => seen += m)(body)
+    }
+    (out, seen.toSeq)
+  }
+
+  private val loops: Seq[(String, () => DataFrame)] = Seq(
+    "PageRank.run" -> (() => PageRank.run(edges, tol = 1e-6, maxIter = 100).ranks),
+    "PageRank.runFixed" -> (() => PageRank.runFixed(edges, iterations = 10)),
+    "PageRank.runRestart" -> (() => PageRank.runRestart(edges, landmarks, iterations = 8)),
+    "PageRank.runWeighted" -> (() => PageRank.runWeighted(edges, iterations = 10)),
+    "LabelPropagation" -> (() => LabelPropagation.run(edges, vertices, iterations = 5)),
+    "ConnectedComponents.minPropagation" -> (() => ConnectedComponents.minPropagation(edges, vertices)),
+    "KCore" -> (() => KCore.run(edges, vertices, k = 3L).vertices),
+    "ShortestPaths.run" -> (() => ShortestPaths.run(edges, vertices, landmarks, weighted = true).distances),
+    "ShortestPaths.landmarkDistances" ->
+      (() => ShortestPaths.landmarkDistances(edges, vertices, landmarks).distances))
+
+  for ((name, run) <- loops)
+    test(s"$name: rebinding gives bit-identical results to per-superstep planning") {
+      val (planned, plannedSteps) = arm(rebind = false)(bits(run()))
+      val (rebound, reboundSteps) = arm(rebind = true)(bits(run()))
+      assert(rebound == planned)
+      assert(reboundSteps.map(s => (s.iter, s.activeCount)) == plannedSteps.map(s => (s.iter, s.activeCount)))
+      assert(!plannedSteps.exists(_.rebound))
+      // superstep 1 plans over the initial leaf and superstep 2 over the
+      // first checkpointed one (no size statistics); a loop settles on one
+      // plan within a few supersteps (a join the initial leaf's statistics
+      // broadcast can change the state's partitioning once more)
+      assert(reboundSteps.take(2).forall(!_.rebound), reboundSteps)
+      assert(reboundSteps.length < 4 || reboundSteps.last.rebound, reboundSteps)
+    }
+
+  test("Hits' in-step checkpoint leaf forces per-superstep planning") {
+    val (planned, _) = arm(rebind = false)(bits(Hits.run(edges, vertices, 6).scores))
+    val (rebound, steps) = arm(rebind = true)(bits(Hits.run(edges, vertices, 6).scores))
+    assert(rebound == planned)
+    assert(steps.length == 6 && steps.forall(!_.rebound), steps)
+  }
+
+  test("runFrontier's broadcast switch is planned afresh, then rebound") {
+    // superstep 1 sees no frontier size yet (shuffle-hash side); from 2 on
+    // the frontier side is broadcast
+    def run() = PageRank.runFrontier(edges, tol = 1e-6, maxIter = 100,
+      broadcastTail = Some(Long.MaxValue - 1))
+    val (planned, _) = arm(rebind = false)(bits(run().ranks))
+    val (rebound, steps) = arm(rebind = true)(bits(run().ranks))
+    assert(rebound == planned)
+    assert(steps.length > 3)
+    assert(!steps(1).rebound, "the switch superstep must be planned")
+    assert(steps.drop(2).forall(_.rebound), steps)
+  }
+
+  test("the superstep after a durable save reads the in-memory leaf, no file scan") {
+    val root = Files.createTempDirectory("graft-rebind").toString
+    val init = (1L to 20L).map(v => (v, v.toDouble, true)).toDF("vid", "value", "active")
+    val states = mutable.Map.empty[Int, DataFrame]
+    val res = IterativeRunner.loop(init, maxIter = 4, truncateEvery = 2,
+      checkpointer = Some(new Checkpointer(spark, root, "r"))) { (state, iter) =>
+      states(iter) = state
+      state.select($"vid", ($"value" - 1.0).as("value"), ($"value" > 1.0).as("active"))
+    }(IterativeRunner.CountTrue("active"))
+    val afterSave = states(3).queryExecution.executedPlan
+    assert(afterSave.collect { case f: FileSourceScanExec => f }.isEmpty, afterSave.treeString)
+    assert(res.metrics(2).rebound, res.metrics)
+    assert(res.metrics.map(_.activeCount) == Seq(19L, 18L, 17L, 16L))
+    // the snapshot and its lineage are still written, with the recorded schema
+    assert(Files.exists(Paths.get(s"$root/r/state/iter=000002/_COMMITTED")))
+    assert(spark.read.parquet(s"$root/r/lineage/iter=000002").agg(sum("rows")).head().getLong(0) == 20L)
+    // metrics.jsonl carries plan_ms and rebound next to the original keys
+    val lines = Files.readAllLines(Paths.get(s"$root/r/metrics.jsonl"))
+    assert(lines.size == 4)
+    assert(lines.get(2).matches(
+      """\{"iter":3,"active_count":17,"wall_ms":\d+,"plan_ms":\d+,"rebound":true\}"""), lines.get(2))
+  }
+
+  test("restore reads with the recorded schema, and infers one when none was recorded") {
+    val root = Files.createTempDirectory("graft-schema").toString
+    val cp = new Checkpointer(spark, root, "r")
+    val df = Seq((1L, 2.0, true), (2L, 3.0, false)).toDF("vid", "value", "active")
+    cp.save(df, 1)
+    val schemaFile = Paths.get(s"$root/r/state/iter=000001/_schema.json")
+    assert(Files.exists(schemaFile))
+    val recorded = cp.restore().get
+    Files.delete(schemaFile)
+    val inferred = cp.restore().get
+    assert(recorded.schema == inferred.schema)
+    assert(bits(recorded) == bits(inferred) && bits(recorded) == bits(df))
+  }
+
+  test("re-running an operator in the same session compiles no new classes") {
+    def runOnce(): Unit = {
+      PageRank.run(edges, tol = 1e-6, maxIter = 100).ranks.collect()
+      LabelPropagation.run(edges, vertices, iterations = 5).collect()
+    }
+    runOnce()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    runOnce()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0L)
+  }
+
+  test("LSH verify-join estimate saturates instead of overflowing at 10^12-scale counts") {
+    // 10^12 candidate pairs x (3*10^13 / 3*10^6 + 1) shingles per pair
+    // exceeds Long.MaxValue; an unsaturated product wraps negative, which
+    // sizes the join to one partition
+    val est = Dedup.verifyRowsEstimate(candRows = 1000000000000L, nDocs = 3000000L,
+      shRows = 30000000000000L)
+    assert(est == Long.MaxValue)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(IterCache.adaptiveParts(spark, est) == 8 * cores)
+    // below saturation it is the plain product, the distinct-pair cap applied
+    assert(Dedup.verifyRowsEstimate(1000000000000L, 1000000L, 1000000000L) ==
+      (1000000L * 999999L / 2L) * 1001L)
+  }
+}

@@ -11,8 +11,9 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // the engine's own builder: local[4] plus its session-wide settings
+    // (the generated-class cache size the codegen spec checks)
+    val s = graft.core.Sessions.localBuilder("4")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
