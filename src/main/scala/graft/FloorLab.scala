@@ -31,7 +31,7 @@ object FloorLab {
 
     val t = graft.model.SyntheticTranscripts.generate(spark, nConvs, 20, 500)
     val g = graft.derive.LinkGraph.fromTranscripts(t)
-    val sym = graft.core.IterCache.byKey(graft.derive.LinkGraph.symmetrize(g.edges), "src")
+    val (sym, _) = graft.core.IterCache.byKey(graft.derive.LinkGraph.symmetrize(g.edges), "src")
     sym.count() // materialize the iteration cache
     // a converged-shape state (vid, pr, deg), checkpoint-leaf like the loop's
     val state = sym.groupBy(col("src").as("vid"))
@@ -69,7 +69,7 @@ object FloorLab {
     // reason it ships; this measures what that safety costs per iteration).
     val segW = org.apache.spark.sql.expressions.Window
       .partitionBy("src").orderBy("dst")
-    val adjSeg = graft.core.IterCache.byKey(
+    val (adjSeg, _) = graft.core.IterCache.byKey(
       sym.withColumn("seg", ((row_number().over(segW) - 1) / 8192).cast("int"))
         .groupBy(col("src"), col("seg")).agg(collect_list(col("dst")).as("dsts")),
       "src")

@@ -30,7 +30,7 @@ object PlanAudit {
     val g = LinkGraph.fromTranscripts(LinkGraph.transcriptsFromEvents(spark, sfDir))
     val sym = LinkGraph.symmetrize(g.edges)
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val adj = graft.core.IterCache.byKey(
+    val (adj, _) = graft.core.IterCache.byKey(
       sym.join(deg, "src").select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("inv")), "src")
     adj.count()
     val state = adj.select(col("src").as("vid")).distinct()

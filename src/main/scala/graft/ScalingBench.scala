@@ -64,122 +64,11 @@ object ScalingBench {
     def thrMean: Double = symEdges / meanIter
   }
 
-  /** CSR-packed mapPartitions superstep — the A/B the north star names
-    * ("range-partitioned CSR-packed adjacency partitions") against the
-    * shipped columnar-cache Dataset join. Each partition of the symmetrized
-    * edge set (hash-partitioned by src, so a vertex's full adjacency is
-    * co-located) is packed into sorted primitive arrays:
-    * (srcs[], offsets[], dsts[]) — an in-memory CSR block. A superstep is
-    *   zipPartitions(csr, ranks):   rank lookup via an open-address
-    *                                long→double map, emit (dst, r/deg)
-    *   reduceByKey(part):           the ONE shuffle per iteration
-    *   ranks.leftOuterJoin(msgs):   narrow (co-partitioned) vprog
-    * i.e. the same one-exchange-per-superstep dataflow as the Dataset loop,
-    * minus Tungsten (row objects + boxing on the shuffle) plus hand-packed
-    * adjacency (no columnar batch decode). Whichever wins ships; the loser
-    * stays documented in BASELINE.md §f. */
-  private def measureCsr(cores: Int, parts: Int, adjPath: String, iters: Int): Measured = {
-    val spark = session(cores, parts)
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val edgePairs = spark.read.parquet(adjPath)
-      .select(col("src"), col("dst")).rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .partitionBy(part)
-    val csr = edgePairs.mapPartitions({ it =>
-      // pack (src, dst) into one long each for a primitive-array sort: vids
-      // of the synthetic graphs are dense and < 2^31
-      val buf = new scala.collection.mutable.ArrayBuffer[Long](1 << 16)
-      while (it.hasNext) {
-        val (s, d) = it.next()
-        require(s >= 0 && d >= 0 && s < Int.MaxValue && d < Int.MaxValue,
-          "CSR lab assumes vids in [0, 2^31)")
-        buf += (s << 32) | d
-      }
-      val packed = buf.toArray
-      java.util.Arrays.sort(packed)
-      val n = packed.length
-      val srcs = new scala.collection.mutable.ArrayBuffer[Long]
-      val offs = new scala.collection.mutable.ArrayBuffer[Int]
-      val dsts = new Array[Long](n)
-      var i = 0
-      var prev = Long.MinValue
-      while (i < n) {
-        val s = packed(i) >>> 32
-        dsts(i) = packed(i) & 0xffffffffL
-        if (s != prev) { srcs += s; offs += i; prev = s }
-        i += 1
-      }
-      offs += n
-      Iterator.single((srcs.toArray, offs.toArray, dsts))
-    }, preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = csr.map(_._3.length.toLong).sum().toLong
-    var ranks = csr.mapPartitions({ it =>
-      val (srcs, _, _) = it.next()
-      srcs.iterator.map(s => (s, 1.0))
-    }, preservesPartitioning = true)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ranks.count()
-    val perIter = Array.newBuilder[Double]
-    for (_ <- 1 to iters) {
-      val t0 = System.nanoTime()
-      val contribs = csr.zipPartitions(ranks, preservesPartitioning = false) { (cit, rit) =>
-        val (srcs, offs, dsts) = cit.next()
-        // open-address long→double map (no boxing on the hot lookup path)
-        val cap = java.lang.Integer.highestOneBit(math.max(16, srcs.length * 2) * 2 - 1) * 2
-        val mask = cap - 1
-        val keys = new Array[Long](cap)
-        val vals = new Array[Double](cap)
-        val used = new Array[Boolean](cap)
-        while (rit.hasNext) {
-          val (k, v) = rit.next()
-          var i = (scala.util.hashing.byteswap64(k) & mask).toInt
-          while (used(i) && keys(i) != k) i = (i + 1) & mask
-          keys(i) = k; vals(i) = v; used(i) = true
-        }
-        new Iterator[(Long, Double)] {
-          private var si = 0
-          private var ei = 0
-          private var contrib = 0.0
-          def hasNext: Boolean = ei < dsts.length
-          def next(): (Long, Double) = {
-            if (ei == offs(si)) { // entering vertex si's slice
-              val s = srcs(si)
-              var i = (scala.util.hashing.byteswap64(s) & mask).toInt
-              while (used(i) && keys(i) != s) i = (i + 1) & mask
-              contrib = (if (used(i)) vals(i) else 0.0) / (offs(si + 1) - offs(si))
-              si += 1
-            }
-            val out = (dsts(ei), contrib)
-            ei += 1
-            out
-          }
-        }
-      }
-      val msgs = contribs.reduceByKey(part, _ + _) // the one shuffle/superstep
-      val next = ranks.leftOuterJoin(msgs) // narrow: both sides on `part`
-        .mapValues { case (r, m) => 0.15 * r + 0.85 * m.getOrElse(0.0) }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      ranks.unpersist(false)
-      ranks = next
-      perIter += (System.nanoTime() - t0) / 1e9
-    }
-    val times = perIter.result()
-    stop(spark)
-    Measured(nEdges, times.sum / times.length, times.min)
-  }
-
-  private def measure(cores: Int, parts: Int, adjPath: String, iters: Int,
-      packed: Boolean = false): Measured = {
+  private def measure(cores: Int, parts: Int, adjPath: String, iters: Int): Measured = {
     val spark = session(cores, parts)
     // same superstep shape as graft.algo.PageRank: two-longs-per-edge cached
-    // side, per-vertex contribution pr/deg on the state side; packed=true is
-    // the int32 A/B arm (measured ~6% slower — BASELINE.md §c round 2)
-    val raw = spark.read.parquet(adjPath)
-    val sym = (if (packed)
-      raw.select(col("src").cast("int").as("src"), col("dst").cast("int").as("dst"))
-    else raw.select(col("src"), col("dst")))
+    // side, per-vertex contribution pr/deg on the state side
+    val sym = spark.read.parquet(adjPath).select(col("src"), col("dst"))
       .repartition(col("src")).persist()
     val nEdges = sym.count()
     var state = sym.groupBy(col("src").as("vid"))
@@ -242,16 +131,11 @@ object ScalingBench {
     // scale): the round-2 granularity sweep measured 64 parts as 2 coarse
     // waves at 32 cores (stragglers dominate the tail) — 256 parts is ~16%
     // faster at n32 and neutral at n8; 512 is flat vs 256.
-    // (Round-2's int32-packed arms measured negative and are settled —
-    // BASELINE.md §d. The round-3 CSR mapPartitions A/B also measured
-    // negative, 2.2-2.7× slower at both levels — §f; re-run it with
-    // SPARK_GRAFT_SCALING_CSR=1.)
+    // (Round-2's int32-packed arms and the round-3 CSR mapPartitions
+    // superstep measured negative, the latter 2.2-2.7× slower at both
+    // levels; their numbers are in BASELINE.md §d and §f.)
     val s8 = timed("n8_big")(measure(8, 64, bigPath, 6))
     val s32 = timed("n32_big")(measure(32, 256, bigPath, 6))
-    val csr = if (sys.env.get("SPARK_GRAFT_SCALING_CSR").contains("1"))
-      Some((timed("n8_big_csr")(measureCsr(8, 64, bigPath, 6)),
-        timed("n32_big_csr")(measureCsr(32, 256, bigPath, 6))))
-    else None
     val m2 = timed("n2_med")(measure(2, 32, medPath, 5))
     val m8 = timed("n8_med")(measure(8, 32, medPath, 8))
 
@@ -265,11 +149,6 @@ object ScalingBench {
     val bigJson = (
       f""","strong_8_32_big":{"min":$big832min%.3f,"mean":$big832mean%.3f}""",
       s",${block("n8_big", s8, 8)},${block("n32_big", s32, 32)}")
-    val csrJson = csr.map { case (c8, c32) =>
-      val (mn, mean) = eff(c8, c32)
-      (f""","strong_8_32_big_csr":{"min":$mn%.3f,"mean":$mean%.3f}""",
-        s",${block("n8_big_csr", c8, 8)},${block("n32_big_csr", c32, 32)}")
-    }.getOrElse(("", ""))
     val loadJson = loads.result()
       .map { case (n, pre, post) => f""""$n":[$pre%.2f,$post%.2f]""" }.mkString("{", ",", "}")
 
@@ -278,7 +157,7 @@ object ScalingBench {
     // per-executor scaling rather than DRAM saturation. The 8→32 big-graph
     // pair is reported alongside, with both regimes explained in BASELINE.md.
     println(
-      f"""{"metric":"scaling_efficiency","value":$med28min%.3f,"unit":"ratio","protocols":{"strong_2_8_med":{"min":$med28min%.3f,"mean":$med28mean%.3f}${bigJson._1}${csrJson._1}}${bigJson._2}${csrJson._2},${block("n2_med", m2, 2)},${block("n8_med", m8, 8)},"load_1m":$loadJson}""")
+      f"""{"metric":"scaling_efficiency","value":$med28min%.3f,"unit":"ratio","protocols":{"strong_2_8_med":{"min":$med28min%.3f,"mean":$med28mean%.3f}${bigJson._1}}${bigJson._2},${block("n2_med", m2, 2)},${block("n8_med", m8, 8)},"load_1m":$loadJson}""")
   }
 
   /** Repeated 2→8-core pair (SPARK_GRAFT_SCALING_ONLY=med): JIT warm-up on

@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.IterativeRunner
 import graft.derive.LinkGraph
 
 /** Connected components. The reference file is an empty stub
@@ -27,44 +28,38 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     // localCheckpoint every round: each star pass references its input ~4×
     // (sym + min-join), so without per-round truncation the logical plan grows
-    // ~16^rounds and OOMs the driver by round 3. AQE off inside the loop
-    // (same rationale as IterativeRunner).
-    var e = edges.select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
+    // ~16^rounds and OOMs the driver by round 3. The canonical edge leaf is
+    // planned with AQE off too: a lazy checkpoint of an adaptive plan runs
+    // its shuffle stages at once, a job before the signature's.
+    val e0 = IterativeRunner.rebase(edges, IterativeRunner.loopSession(spark, None))
+      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
+    var sig = signature(e0)
+    // the star rounds plan in a loop session whose exchange width comes from
+    // the data: the first signature action materialized the edge leaf, so
+    // its row count is known
+    val session = IterativeRunner.loopSession(spark,
+      Some(graft.core.IterCache.adaptiveParts(spark, sig._1)))
+    var e = IterativeRunner.rebase(e0, session)
     var converged = false
     var round = 0
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      var sig = signature(e)
-      // scale-adaptive loop partitioning (guide §2.2): the first signature
-      // action materialized `e`, so its row count is known — derive the
-      // star-round exchange width from it instead of the session constant
-      spark.conf.set("spark.sql.shuffle.partitions",
-        graft.core.IterCache.adaptiveParts(spark, sig._1).toString)
-      while (!converged && round < maxRounds) {
-        round += 1
-        val next = smallStar(largeStar(e).localCheckpoint(false)).localCheckpoint(false)
-        val nextSig = signature(next)
-        converged = nextSig == sig
-        sig = nextSig
-        e = next
-      }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
+    while (!converged && round < maxRounds) {
+      round += 1
+      val next = smallStar(largeStar(e).localCheckpoint(false)).localCheckpoint(false)
+      val nextSig = signature(next)
+      converged = nextSig == sig
+      sig = nextSig
+      e = next
     }
     // Converged state is a forest of stars (src = component min, dst = member).
     val labels = e.select(col("dst").as("vid"), col("src").as("component"))
       .union(e.select(col("src").as("vid"), col("src").as("component")))
       .distinct()
-    vertices.select(col("vid"))
+    IterativeRunner.rebase(vertices.select(col("vid"))
       .join(labels, Seq("vid"), "left")
-      .select(col("vid"), coalesce(col("component"), col("vid")).as("component"))
+      .select(col("vid"), coalesce(col("component"), col("vid")).as("component")), spark)
   }
 
   /** Large-Star: every node's strictly-larger neighbors link to the minimum
@@ -103,9 +98,9 @@ object ConnectedComponents {
 
   /** Pregel min-label flood with frontier semi-join; cross-check for [[run]]. */
   def minPropagation(edges: DataFrame, vertices: DataFrame, maxIter: Int = 50): DataFrame = {
-    val (sym, parts) = graft.core.IterCache.byKeyAdaptive(LinkGraph.symmetrize(edges), "src")
+    val (sym, parts) = graft.core.IterCache.byKey(LinkGraph.symmetrize(edges), "src")
     val init = vertices.select(col("vid"), col("vid").as("component"), lit(true).as("active"))
-    val res = graft.core.IterativeRunner.loop(init, maxIter,
+    val res = IterativeRunner.loop(init, maxIter,
       shuffleParts = Some(parts)) { (state, _) =>
       val msgs = sym
         .join(state.where(col("active")).select(col("vid").as("src"), col("component"))
@@ -116,7 +111,7 @@ object ConnectedComponents {
         col("vid"),
         least(col("component"), coalesce(col("m"), col("component"))).as("component"),
         (coalesce(col("m"), col("component")) < col("component")).as("active"))
-    }(graft.core.IterativeRunner.CountTrue("active"))
+    }(IterativeRunner.CountTrue("active"))
     sym.unpersist(false)
     res.state.select("vid", "component")
   }

@@ -36,8 +36,8 @@ object Hits {
   /** @return (vid, hub, auth) for every vertex, after `iterations` rounds. */
   def run(edges: DataFrame, vertices: DataFrame, iterations: Int = 10): Result = {
     val dir = edges.select(col("src"), col("dst"))
-    val (bySrc, parts) = graft.core.IterCache.byKeyAdaptive(dir, "src")
-    val byDst = graft.core.IterCache.byKeyParts(dir, "dst", parts)
+    val (bySrc, parts) = graft.core.IterCache.byKey(dir, "src")
+    val (byDst, _) = graft.core.IterCache.byKey(dir, "dst", Some(parts))
 
     val init = vertices.select(col("vid"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 

@@ -28,7 +28,7 @@ object KCore {
     *         final all-quiet confirmation round. */
   def run(edges: DataFrame, vertices: DataFrame, k: Long, maxIter: Int = 100): Result = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
-    val (sym, parts) = graft.core.IterCache.byKeyAdaptive(
+    val (sym, parts) = graft.core.IterCache.byKey(
       LinkGraph.symmetrize(
         edges.select(least(col("src"), col("dst")).as("src"),
             greatest(col("src"), col("dst")).as("dst"))

@@ -23,7 +23,7 @@ import graft.derive.LinkGraph
 object LabelPropagation {
 
   def run(edges: DataFrame, vertices: DataFrame, iterations: Int = 5): DataFrame = {
-    val (sym, parts) = graft.core.IterCache.byKeyAdaptive(LinkGraph.symmetrize(edges), "src")
+    val (sym, parts) = graft.core.IterCache.byKey(LinkGraph.symmetrize(edges), "src")
     val init = vertices.select(col("vid"), col("vid").as("lab"))
     val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
       val counts = sym

@@ -62,7 +62,7 @@ object PageRank {
     * per exchange (guide §2.2). The count is threaded into every loop so all
     * superstep exchanges co-partition with the cache. */
   private def symCache(edges: DataFrame): (DataFrame, Int) =
-    graft.core.IterCache.byKeyAdaptive(LinkGraph.symmetrize(edges), "src")
+    graft.core.IterCache.byKey(LinkGraph.symmetrize(edges), "src")
 
   /** Per-vertex degree over the symmetrized edge set, for the init state.
     * With `vertices` supplied, isolated (degree-0) vertices are seeded too —
@@ -239,7 +239,7 @@ object PageRank {
       edges: DataFrame,
       iterations: Int,
       resetProb: Double = 0.15): DataFrame = {
-    val (symw, parts) = graft.core.IterCache.byKeyAdaptive(
+    val (symw, parts) = graft.core.IterCache.byKey(
       edges.select(col("src"), col("dst"), col("weight"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst"), col("weight"))),
       "src")

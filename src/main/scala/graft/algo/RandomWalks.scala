@@ -1,10 +1,11 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.{IterCache, IterativeRunner}
 import graft.derive.LinkGraph
 
 /** Random-walk generators (DeepWalk / Node2Vec / MetaPath2Vec — the
@@ -47,6 +48,15 @@ object RandomWalks {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
 
+  /** The session a walk's steps plan in, sized by the cached neighbor
+    * index's row count (the count also materializes the cache, which the
+    * first step would anyway), and the index as a frame of it. */
+  private def walkSession(index: DataFrame): (SparkSession, DataFrame) = {
+    val spark = index.sparkSession
+    val session = IterativeRunner.loopSession(spark, Some(IterCache.adaptiveParts(spark, index.count())))
+    (session, IterativeRunner.rebase(index, session))
+  }
+
   /** Portable per-(walk, step, salt) pseudo-uniform in [0, 2000003): pure
     * integer arithmetic (squared mixing like Similarity.planeComponent), so
     * the DuckDB oracle replays the exact same walks — q_deepwalk is a full
@@ -80,33 +90,31 @@ object RandomWalks {
       walksPerVertex: Int = 1,
       pathLength: Int = 10,
       seed: Long = 42L): DataFrame = {
-    val idx = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = edges.sparkSession
-    // round 6: one count materializes the index cache (the first step would
-    // anyway) and sizes the step-loop conf; start degrees are derived FROM
-    // the cached index (identical rows: count of sym edges per src) instead
-    // of re-deriving the upstream edge table a second time
-    val nIdx = idx.count()
-    graft.core.IterCache.withAdaptiveConf(spark, nIdx) {
-      val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-        .crossJoin(spark.range(walksPerVertex).select(col("id").as("rep")))
-        .select(
-          (col("vid") * walksPerVertex + col("rep")).as("walk_id"),
-          col("vid").as("cur"), col("deg").as("cur_deg"),
-          array(col("vid")).as("path"))
-      var walks = starts.localCheckpoint(false)
-      for (step <- 1 until pathLength) {
-        val pick = draw(col("walk_id"), step, col("cur_deg"), seed)
-        val drawn = walks
-          .join(idx, walks("cur") === idx("src") && pick === idx("idx"))
-          .select(col("walk_id"), col("dst").as("cur"), col("dst_deg").as("cur_deg"),
-            concat(col("path"), array(col("dst"))).as("path"))
-        walks = drawn.localCheckpoint(false)
-      }
-      walks.count() // materialize the lazy checkpoint chain while idx is cached
-      idx.unpersist(false)
-      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
+    val cached = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    // start degrees are derived FROM the cached index (identical rows: count
+    // of sym edges per src) instead of re-deriving the upstream edge table
+    // a second time (round 6)
+    val (session, idx) = walkSession(cached)
+    val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
+      .crossJoin(session.range(walksPerVertex).select(col("id").as("rep")))
+      .select(
+        (col("vid") * walksPerVertex + col("rep")).as("walk_id"),
+        col("vid").as("cur"), col("deg").as("cur_deg"),
+        array(col("vid")).as("path"))
+    var walks = starts.localCheckpoint(false)
+    for (step <- 1 until pathLength) {
+      val pick = draw(col("walk_id"), step, col("cur_deg"), seed)
+      val drawn = walks
+        .join(idx, walks("cur") === idx("src") && pick === idx("idx"))
+        .select(col("walk_id"), col("dst").as("cur"), col("dst_deg").as("cur_deg"),
+          concat(col("path"), array(col("dst"))).as("path"))
+      walks = drawn.localCheckpoint(false)
     }
+    walks.count() // materialize the lazy checkpoint chain while idx is cached
+    cached.unpersist(false)
+    IterativeRunner.rebase(
+      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
+      edges.sparkSession)
   }
 
   /** Node2Vec p/q-biased second-order walk via bounded rejection sampling
@@ -130,19 +138,16 @@ object RandomWalks {
       attempts: Int = 4,
       seed: Long = 42L): DataFrame = {
     val top = math.max(1.0, math.max(1.0 / p, 1.0 / q))
-    val idx = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = edges.sparkSession
+    val cached = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
     // round 6: the membership set and the start degrees are PROJECTIONS of
     // the cached index (same symmetrized rows) — the old code re-derived the
-    // upstream edge table twice more and paid a second cache build; the one
-    // count sizes the step-loop conf and materializes the index
-    val nIdx = idx.count()
+    // upstream edge table twice more and paid a second cache build
+    val (session, idx) = walkSession(cached)
     val nbrSet = idx
       .select(col("src").as("m_src"), col("dst").as("m_dst"), lit(true).as("in_nbr"))
-    graft.core.IterCache.withAdaptiveConf(spark, nIdx) {
     // step 1: uniform first hop
     val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-      .crossJoin(spark.range(walksPerVertex).select(col("id").as("rep")))
+      .crossJoin(session.range(walksPerVertex).select(col("id").as("rep")))
       .select((col("vid") * walksPerVertex + col("rep")).as("walk_id"),
         col("vid").as("cur"), col("deg").as("cur_deg"), array(col("vid")).as("path"))
     var walks = starts
@@ -185,9 +190,10 @@ object RandomWalks {
         .localCheckpoint(false)
     }
     walks.count() // materialize the lazy checkpoint chain while caches live
-    idx.unpersist(false)
-    walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
-    }
+    cached.unpersist(false)
+    IterativeRunner.rebase(
+      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
+      edges.sparkSession)
   }
 
   /** MetaPath2Vec: type-constrained walk (`MetaPath2Vec.scala:151-171`): at
@@ -204,22 +210,20 @@ object RandomWalks {
       seed: Long = 42L): DataFrame = {
     val kinds = vertices.select(col("vid").as("dst"), col("kind"))
     val symK = LinkGraph.symmetrize(edges).join(kinds, "dst")
-    val idx = symK
+    val cached = symK
       .withColumn("idx",
         row_number().over(Window.partitionBy("src", "kind").orderBy("dst")) - 1)
       .select(col("src"), col("kind"), col("idx"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // round 6: one count materializes the index cache and sizes the
-    // step-loop conf; the per-(src, kind) degrees come from the cached
-    // index (identical rows) instead of a second symK pass + second cache
-    val nIdx = idx.count()
+    // round 6: the per-(src, kind) degrees come from the cached index
+    // (identical rows) instead of a second symK pass + second cache
+    val (session, idx) = walkSession(cached)
     // leaf: every walk step probes degK — without it the per-(src, kind)
     // aggregate over the FULL cached index would re-run once per step
     // (round-6 review finding; the leaf materializes it once)
     val degK = idx.groupBy("src", "kind").agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
-    graft.core.IterCache.withAdaptiveConf(edges.sparkSession, nIdx) {
-    val starts = vertices.where(col("kind") === metaPath.head)
+    val starts = IterativeRunner.rebase(vertices, session).where(col("kind") === metaPath.head)
       .select(col("vid").as("walk_id"), col("vid").as("cur"), array(col("vid")).as("path"),
         lit(false).as("stopped"))
     var walks = starts.localCheckpoint(false)
@@ -241,8 +245,9 @@ object RandomWalks {
       walks = drawn.localCheckpoint(false)
     }
     walks.count() // materialize the lazy checkpoint chain while caches live
-    idx.unpersist(false)
-    walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
-    }
+    cached.unpersist(false)
+    IterativeRunner.rebase(
+      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
+      edges.sparkSession)
   }
 }

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.IterativeRunner
+
 /** SVD++ (Koren, KDD'08) collaborative filtering on a bipartite rating graph —
   * capability parity with the reference's `algo/svdpp/SVDPlusPlus.scala:11-203`
   * (vertex data `SVDPPVD(v1,v2,v3,v4)` = (factors, weighted factors/y, bias,
@@ -82,23 +84,17 @@ object SVDPlusPlus {
     */
   def run(ratings: DataFrame, conf: Conf = Conf()): Result = {
     val spark = ratings.sparkSession
-    val e = ratings.select(col("src"), col("dst"), col("rating").cast("double"))
+    val edges = ratings.select(col("src"), col("dst"), col("rating").cast("double"))
       .persist()
-    val u = e.agg(avg("rating")).head().getDouble(0)
+    val u = edges.agg(avg("rating")).head().getDouble(0)
     // Round 6: the SGD loop is the same superstep grammar as the Pregel
-    // algos — scope its shuffle width to the DATA (the widest intermediate
-    // is the 2-endpoint × rank gradient explode over the edge set) instead
-    // of the session constant, and switch AQE off for the loop like
-    // IterativeRunner (static right-sized plans; AQE's per-stage re-planning
-    // of ~25 mini-queries only costs driver time). e.count() is free: the
-    // mean aggregate above already materialized the persisted edge cache.
-    val loopParts = graft.core.IterCache.adaptiveParts(spark,
-      e.count() * 2L * conf.rank)
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    // algos — it plans in a loop session whose shuffle width comes from the
+    // DATA (the widest intermediate is the 2-endpoint × rank gradient explode
+    // over the edge set) instead of the session constant. edges.count() is
+    // free: the mean aggregate above already materialized the edge cache.
+    val session = IterativeRunner.loopSession(spark,
+      Some(graft.core.IterCache.adaptiveParts(spark, edges.count() * 2L * conf.rank)))
+    val e = IterativeRunner.rebase(edges, session)
 
     // init: bias = mean incident rating - u, norm = 1/sqrt(deg)  (reference
     // Graph.updateVertexAttr init, SVDPlusPlus.scala:32-38)
@@ -226,11 +222,7 @@ object SVDPlusPlus {
       .select(pow(col("rating") - predicted(col("p2"), col("qi"), col("bu"), col("bi")), 2).as("se"))
       .agg(sum("se")).head().getDouble(0)
     val n = e.count()
-    e.unpersist(false)
-    Result(v, u, sqErr / n)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
+    edges.unpersist(false)
+    Result(IterativeRunner.rebase(v, spark), u, sqErr / n)
   }
 }

@@ -38,7 +38,7 @@ object ShortestPaths {
         (if (weighted) col("weight") else lit(1L)).cast("long").as("w"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst"),
         (if (weighted) col("weight") else lit(1L)).cast("long").as("w")))
-    val (sym, parts) = graft.core.IterCache.byKeyAdaptive(symw, "src")
+    val (sym, parts) = graft.core.IterCache.byKey(symw, "src")
 
     val init = vertices.select(col("vid"))
       .join(sources.select(col("vid"), lit(true).as("is_src")), Seq("vid"), "left")
@@ -83,7 +83,7 @@ object ShortestPaths {
       vertices: DataFrame,
       sources: DataFrame,
       maxIter: Int = 100): Result = {
-    val (sym, parts) = graft.core.IterCache.byKeyAdaptive(
+    val (sym, parts) = graft.core.IterCache.byKey(
       graft.derive.LinkGraph.symmetrize(edges.select(col("src"), col("dst"))), "src")
 
     val init = sources.select(col("vid"), col("vid").as("lm"),

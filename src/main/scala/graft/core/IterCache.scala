@@ -1,11 +1,13 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** Iteration-side cache for the big (edge-shaped) operand of a superstep
-  * loop. Three deliberate choices, each measured in PerfLab:
+  * loop. Three deliberate choices, each measured (BASELINE.md §c):
   *
   *  1. `localCheckpoint(DISK_ONLY)` first: truncates the (possibly huge)
   *     derivation lineage to a leaf. The CacheManager canonicalizes every
@@ -57,26 +59,6 @@ object IterCache {
     math.max(1L, math.min(cores * 8L, math.max(byThroughput, fill))).toInt
   }
 
-  /** Run `body` with loop-shaped session settings: shuffle partitions =
-    * [[adaptiveParts]](rows) and AQE off (static right-sized plans — AQE's
-    * per-stage re-planning only adds driver overhead to a chain of
-    * mini-queries; same rationale as [[IterativeRunner.loop]]), restored
-    * afterwards. For loop-style operators that do not go through
-    * IterativeRunner (random walks, SGD, dedup propagation). NOTE: any
-    * DataFrame RETURNED out of `body` is planned at the caller's action,
-    * under the restored session settings. */
-  def withAdaptiveConf[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(body: => T): T = {
-    val parts = adaptiveParts(spark, rows)
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
-  }
-
   /** Hash-repartition `df` by `key` to [[adaptiveParts]](workUnits) ONLY
     * when its planned parallelism is below that — raises the parallelism of
     * a wide aggregate over a small under-split input (one parquet split /
@@ -86,15 +68,21 @@ object IterCache {
     * aggregate must keep finishing groups before any exchange — shuffling
     * the pre-aggregate rows there would cost dim× the bytes).
     *
-    * CONTRACT: `df` must be a checkpoint leaf or a shuffle-free plan
-    * (scan/project/generate only). The parallelism probe reads
-    * `df.rdd.getNumPartitions`, and under AQE accessing `.rdd` of a plan
-    * with upstream exchanges EXECUTES those shuffle stages just to finalize
-    * the plan — silent double execution. Every current caller passes a leaf
-    * or a pure scan pipeline. */
+    * `df` must be a checkpoint leaf or a shuffle-free plan
+    * (scan/project/generate only): the parallelism probe reads the planned
+    * RDD's partition count, and under AQE that EXECUTES any upstream
+    * shuffle stages just to finalize the plan — silent double execution.
+    * A frame whose plan has an exchange is refused. */
   def widenIfNarrow(df: DataFrame, workUnits: Long, key: String): DataFrame = {
+    val qe = df.queryExecution
+    val exchanges = qe.executedPlan.exists {
+      case _: Exchange => true
+      case a: AdaptiveSparkPlanExec => a.initialPlan.exists(_.isInstanceOf[Exchange])
+      case _ => false
+    }
+    require(!exchanges, s"widenIfNarrow needs a leaf or a shuffle-free plan:\n${qe.executedPlan}")
     val parts = adaptiveParts(df.sparkSession, workUnits)
-    if (df.rdd.getNumPartitions >= parts) df else df.repartition(parts, col(key))
+    if (qe.toRdd.getNumPartitions >= parts) df else df.repartition(parts, col(key))
   }
 
   /** Exact output row count of an equi-self-join of `df` on `keys` with an
@@ -111,30 +99,19 @@ object IterCache {
     if (ordered) pairs2 / 2L else pairs2
   }
 
-  def byKey(df: DataFrame, key: String): DataFrame =
-    df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-      .repartition(col(key))
-      .persist()
-
-  /** [[byKey]] pinned to an explicit partition count (e.g. a sibling cache's
-    * [[byKeyAdaptive]]-derived count, so two caches of the same loop
-    * co-partition without a second sizing scan). */
-  def byKeyParts(df: DataFrame, key: String, parts: Int): DataFrame =
-    df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-      .repartition(parts, col(key))
-      .persist()
-
-  /** [[byKey]] with a scale-adaptive partition count: the eager DISK_ONLY
-    * leaf is counted (one cheap scan of the just-written checkpoint — ~0.1 s
-    * at 13.7M rows, negligible against any loop that follows) and the hash
-    * repartition uses [[adaptiveParts]] instead of the session constant.
-    * Returns (cached frame, partition count) so the caller can pin the
-    * loop's OTHER exchanges (state shuffles, message aggregates) to the same
-    * count via [[IterativeRunner.loop]]'s `shuffleParts` — mismatched counts
-    * would re-exchange the cached side every superstep. */
-  def byKeyAdaptive(df: DataFrame, key: String): (DataFrame, Int) = {
+  /** The cache itself: the eager DISK_ONLY leaf, hash-repartitioned by
+    * `key` and persisted. The partition count is `parts` when given (a
+    * sibling cache's count, so two caches of one loop co-partition without
+    * a second sizing scan), else [[adaptiveParts]] of the leaf's row count
+    * (one cheap scan of the just-written checkpoint — ~0.1 s at 13.7M rows,
+    * negligible against any loop that follows). Returns (cached frame,
+    * partition count) so the caller can pin the loop's OTHER exchanges
+    * (state shuffles, message aggregates) to the same count via
+    * [[IterativeRunner.loop]]'s `shuffleParts` — mismatched counts would
+    * re-exchange the cached side every superstep. */
+  def byKey(df: DataFrame, key: String, parts: Option[Int] = None): (DataFrame, Int) = {
     val leaf = df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-    val parts = adaptiveParts(leaf.sparkSession, leaf.count())
-    (leaf.repartition(parts, col(key)).persist(), parts)
+    val n = parts.getOrElse(adaptiveParts(leaf.sparkSession, leaf.count()))
+    (leaf.repartition(n, col(key)).persist(), n)
   }
 }

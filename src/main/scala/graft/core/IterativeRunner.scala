@@ -2,8 +2,10 @@ package graft.core
 
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession, classic}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
 /** Per-iteration metrics row (the engine analog of the reference Pregel's
   * per-superstep bookkeeping, `framework/Pregel.scala:41-48` — whose early
@@ -62,27 +64,57 @@ object IterativeRunner {
     * return them (what the rebinding specs inspect). */
   private[graft] val onSuperstep = new DynamicVariable[IterMetrics => Unit](_ => ())
 
-  /** @param init        initial state; any schema, must contain the columns
-    *                    `step` expects.
-    * @param maxIter     hard iteration cap.
-    * @param activeCount action deciding convergence: number of still-active
-    *                    vertices in the NEW state; 0 stops the loop.
-    * @param step        (state, iter) → next state. Must be a pure Dataset
-    *                    transformation. It may reference `state` any number of
-    *                    times: the loop truncates the plan to a leaf every
-    *                    iteration, so multiple references do NOT nest
-    *                    exponentially across supersteps (a k-reference step
-    *                    would otherwise grow the logical plan k^n deep and OOM
-    *                    the driver around iteration 10 — measured, not
-    *                    hypothetical).
+  /** Sees the physical plan each superstep runs (what the loop-session
+    * spec inspects). */
+  private[graft] val onPlan = new DynamicVariable[SparkPlan => Unit](_ => ())
+
+  /** The session a superstep loop plans in: a clone of `spark` — its
+    * settings, catalog, UDFs and query listeners as they are now, its
+    * SparkContext and cached data shared — with AQE off and, when given,
+    * `parts` shuffle partitions. AQE stays off because a rebound superstep
+    * swaps rows into a static plan, which an adaptive plan does not have.
+    * The caller's session is never changed, so queries running next to the
+    * loop on it keep their own settings. Make one per loop call: a clone
+    * does not see listeners registered on `spark` after it was made. */
+  def loopSession(spark: SparkSession, parts: Option[Int]): SparkSession = {
+    val child = GraftShim.cloneSession(spark)
+    val conf = child.asInstanceOf[classic.SparkSession].sessionState.conf
+    conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    parts.foreach(conf.setConf(SQLConf.SHUFFLE_PARTITIONS, _))
+    child
+  }
+
+  /** `df` as a frame of `session`: its analyzed plan, optimized and planned
+    * under that session's settings. */
+  def rebase(df: DataFrame, session: SparkSession): DataFrame =
+    if (df.sparkSession eq session) df else GraftShim.ofRows(session, df.queryExecution.analyzed)
+
+  /** Runs supersteps until `maxIter` or until `activeCount` is 0. Every
+    * superstep is planned in a [[loopSession]] of `init`'s session; the
+    * returned state is a frame of `init`'s session again, planned under its
+    * settings.
+    *
+    * @param init         initial state; any schema, must contain the columns
+    *                     `step` expects.
+    * @param maxIter      hard iteration cap.
+    * @param shuffleParts scale-adaptive shuffle-partition count for every
+    *                     exchange inside the loop (state shuffles, message
+    *                     aggregates) — normally the count [[IterCache.byKey]]
+    *                     derived for the cached edge side, so all loop
+    *                     exchanges co-partition with it and the cached
+    *                     exchange is reused every superstep. None keeps the
+    *                     caller's setting.
+    * @param step         (state, iter) → next state. Must be a pure Dataset
+    *                     transformation. It may reference `state` any number
+    *                     of times: the loop truncates the plan to a leaf every
+    *                     iteration, so multiple references do NOT nest
+    *                     exponentially across supersteps (a k-reference step
+    *                     would otherwise grow the logical plan k^n deep and
+    *                     OOM the driver around iteration 10 — measured, not
+    *                     hypothetical).
+    * @param activeCount  action deciding convergence: number of still-active
+    *                     vertices in the NEW state; 0 stops the loop.
     */
-  /** @param shuffleParts scale-adaptive shuffle-partition count for every
-    *   exchange inside the loop (state shuffles, message aggregates) —
-    *   normally the count [[IterCache.byKeyAdaptive]] derived for the cached
-    *   edge side, so all loop exchanges co-partition with it and the cached
-    *   exchange is reused every superstep. None keeps the session setting
-    *   (the pre-round-6 behavior: a constant tuned for local[cpus] that
-    *   scheduled 32-task stages over kilo-row fixture graphs — guide §2.2). */
   def loop(
       init: DataFrame,
       maxIter: Int,
@@ -91,37 +123,18 @@ object IterativeRunner {
       shuffleParts: Option[Int] = None)(
       step: (DataFrame, Int) => DataFrame)(
       activeCount: DataFrame => Long): Result = {
-
-    // AQE off for the duration of the loop: adaptive re-planning of the
-    // per-superstep message shuffle defeats the static one-exchange plan and
-    // its partitioning reuse (measured ~2× slower; PLANS.md). Restored after.
     val spark = init.sparkSession
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    shuffleParts.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p.toString))
-    try loopInner(init, maxIter, truncateEvery, checkpointer)(step)(activeCount)
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
-  }
-
-  private def loopInner(
-      init: DataFrame,
-      maxIter: Int,
-      truncateEvery: Int,
-      checkpointer: Option[Checkpointer])(
-      step: (DataFrame, Int) => DataFrame)(
-      activeCount: DataFrame => Long): Result = {
+    val session = loopSession(spark, shuffleParts)
     val startIter = checkpointer.flatMap(_.latestIter).getOrElse(0)
-    var state = checkpointer.flatMap(_.restore()).getOrElse(init)
-    // LAZY local checkpoint: truncates the logical plan to a leaf immediately
-    // (so multi-reference steps can't nest exponentially) but defers
-    // materialization to the convergence action — one job per superstep, not
-    // two. Storage is MEMORY_AND_DISK; superseded iterations are dropped by
-    // the ContextCleaner once unreferenced.
-    state = state.localCheckpoint(false)
+    val start = rebase(checkpointer.flatMap(_.restore()).getOrElse(init), session)
+    // the first leaf is made like every later one (lazy local checkpoint,
+    // no size statistics), so superstep 2 can rebind superstep 1's plan.
+    // LAZY: truncates the logical plan to a leaf immediately (so
+    // multi-reference steps can't nest exponentially) but defers
+    // materialization to the convergence action — one job per superstep,
+    // not two. Superseded leaves are dropped by the ContextCleaner once
+    // unreferenced.
+    var state = SuperstepPlan.checkpoint(start, start.queryExecution.executedPlan)
     var iter = startIter
     val metrics = Vector.newBuilder[IterMetrics]
     var active = 1L
@@ -129,7 +142,7 @@ object IterativeRunner {
     while (iter < maxIter && active > 0) {
       val t0 = System.nanoTime()
       iter += 1
-      val stepDf = step(state, iter)
+      val stepDf = rebase(step(state, iter), session)
       val leaf = SuperstepPlan.leafOf(state)
       val reuse =
         if (rebind.value) cached.filter(c => leaf.exists(c.fits(stepDf, _))) else None
@@ -140,6 +153,7 @@ object IterativeRunner {
           cached = leaf.flatMap(SuperstepPlan.cache(stepDf, _, p))
           p
       }
+      onPlan.value(plan)
       val next = SuperstepPlan.checkpoint(stepDf, plan)
       val planMs = (System.nanoTime() - t0) / 1000000L
       // durable snapshot for kill/resume; the loop keeps the in-memory leaf,
@@ -155,6 +169,6 @@ object IterativeRunner {
       checkpointer.foreach(_.appendMetrics(m))
       state = next
     }
-    Result(state, iter, metrics.result())
+    Result(rebase(state, spark), iter, metrics.result())
   }
 }

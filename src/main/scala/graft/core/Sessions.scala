@@ -24,6 +24,7 @@ object Sessions {
   def localBuilder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
     if (!sys.props.contains(CodegenCacheKey)) b.config(CodegenCacheKey, CodegenCacheEntries)
+    if (!sys.props.contains(IsolationKey)) b.config(IsolationKey, false)
     if (externallyManaged) {
       println(s"[sessions] deferring to injected spark.master=${sys.props("spark.master")}")
       b
@@ -38,4 +39,14 @@ object Sessions {
     * repeat compiles none. */
   private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
   private val CodegenCacheEntries = 1000L
+
+  /** Per-session artifact isolation, off unless a launcher set it: graft
+    * adds no per-session jars or files, and an isolated session runs its
+    * tasks in an executor class loader of its own. Every superstep loop
+    * plans in a session cloned from the caller's
+    * ([[IterativeRunner.loopSession]]), so with isolation each loop call
+    * compiled again the generated classes its tasks use (16 for a repeated
+    * PageRank on the test graph) — the generated-class cache is keyed by
+    * class loader. */
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
 }

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.IterativeRunner
 import graft.text.TextStats
 
 /** Document deduplication operators for a large-scale training-data pipeline:
@@ -310,20 +311,15 @@ object Dedup {
       rounds: Int = 8,
       escalate: Boolean = false): (DataFrame, Long) = {
     val spark = pairs.sparkSession
-    val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val pairGraph = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(false) // referenced every round
-    // Scope the propagation rounds like IterativeRunner.loop does (round 6):
-    // shuffle partitions derived from the pair-graph size (the sym count
-    // materializes the leaf, which the first round needs anyway) and AQE off
-    // — with right-sized static partitions its per-stage re-planning only
-    // adds driver overhead to the ~9 mini-queries of the round chain.
-    val loopParts = graft.core.IterCache.adaptiveParts(spark, sym.count())
-    val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    // the rounds plan in a loop session (round 6) whose shuffle width comes
+    // from the pair-graph size (the count materializes the leaf, which the
+    // first round needs anyway)
+    val session = IterativeRunner.loopSession(spark,
+      Some(graft.core.IterCache.adaptiveParts(spark, pairGraph.count())))
+    val sym = IterativeRunner.rebase(pairGraph, session)
     var state = sym.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("canonical"))
       .localCheckpoint(false)
@@ -354,16 +350,9 @@ object Dedup {
         remaining = probe(state)
       }
     }
-    // `out` is corpus-sized but PLANNED at the caller's action, after the
-    // finally below restored the session settings — so it does not inherit
-    // the loop's tiny partition count
     val out = docs.select(col("doc_id")).join(state.hint("shuffle_hash"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("canonical"), col("doc_id")).as("canonical_id"))
-    (out, unconverged)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-      spark.conf.set("spark.sql.shuffle.partitions", partsBefore)
-    }
+    (IterativeRunner.rebase(out, spark), unconverged)
   }
 
   /** 60-bit SimHash signature per doc, token-weighted (each occurrence votes

@@ -1,36 +1,22 @@
 // Capture the PageRank-superstep physical plan (the shared shape of every
 // iterative algo) at a given scale factor, into
-// plans/r06/superstep_<suffix>.txt. Uses IterCache.byKeyAdaptive when the
-// classpath has it (post-change classes), else IterCache.byKey (pre-change):
-// the before/after pair shows the Exchange partition counts - the round-6
-// scale-adaptive partitioning evidence.
+// plans/r06/superstep_<suffix>.txt: the edge cache from IterCache.byKey,
+// planned in the loop session IterativeRunner.loopSession makes for it, so
+// the Exchange partition counts are the loop's scale-adaptive ones.
 //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 GRAFT_PLAN_SUFFIX=before \
 //   SPARK_GRAFT_CPUS=32 /opt/spark/bin/spark-shell --master "local[32]" \
 //     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
 //     --driver-class-path target/scala-2.13/classes -i tools/dump_superstep.scala
 {
   import org.apache.spark.sql.functions._
+  import graft.core.{IterCache, IterativeRunner}
   val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
   spark.sparkContext.setLogLevel("ERROR")
-  spark.conf.set("spark.sql.adaptive.enabled", "false") // loop conditions
   val g = graft.derive.LinkGraph.fromTranscripts(
     graft.derive.LinkGraph.transcriptsFromEvents(spark, sfDir))
-  val symRaw = graft.derive.LinkGraph.symmetrize(g.edges)
-  // post-change classes have byKeyAdaptive; fall back to byKey on old ones
-  val (sym, parts) =
-    try {
-      val m = graft.core.IterCache.getClass.getMethod(
-        "byKeyAdaptive", classOf[org.apache.spark.sql.DataFrame], classOf[String])
-      val r = m.invoke(graft.core.IterCache, symRaw, "src")
-        .asInstanceOf[(org.apache.spark.sql.DataFrame, Int)]
-      spark.conf.set("spark.sql.shuffle.partitions", r._2.toString)
-      r
-    } catch {
-      case _: NoSuchMethodException =>
-        (graft.core.IterCache.byKey(symRaw, "src"),
-          spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    }
+  val (cached, parts) = IterCache.byKey(graft.derive.LinkGraph.symmetrize(g.edges), "src")
+  val sym = IterativeRunner.rebase(cached, IterativeRunner.loopSession(spark, Some(parts)))
   sym.count()
   val state = sym.groupBy(col("src").as("vid"))
     .agg(count(lit(1)).cast("double").as("deg"))
