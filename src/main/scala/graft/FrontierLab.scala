@@ -32,21 +32,14 @@ object FrontierLab {
         f"load_pre=$l0%.2f load_post=${graft.core.HostLoad.load1}%.2f")
       if (r.frontierSizes.nonEmpty)
         println(s"FRONTIERLAB $label frontier_sizes=${r.frontierSizes.mkString(",")}")
-      // per-iteration wall times for the convergence tail: the broadcast-tail
-      // A/B signal lives in the last few (tiny-frontier) iterations, and
-      // per-iteration times are far less steal-exposed than loop totals
+      // per-iteration wall times for the convergence tail (tiny-frontier
+      // iterations): far less steal-exposed than loop totals
       println(s"FRONTIERLAB $label tail_iter_ms=${r.metrics.takeRight(12).map(_.wallMs).mkString(",")}")
       keep += label -> r.ranks.localCheckpoint(false)
     }
     time("exact")(graft.algo.PageRank.run(edges, tol = 1e-6, maxIter = 100))
     spark.catalog.clearCache()
     time("frontier")(graft.algo.PageRank.runFrontier(edges, tol = 1e-6, maxIter = 100))
-    spark.catalog.clearCache()
-    // broadcast-tail arm: once the frontier drops below the threshold, the
-    // delta join broadcasts the frontier side instead of shuffle-hashing it
-    val bt = sys.env.get("SPARK_GRAFT_FRONTIER_BCAST").map(_.toLong).orElse(Some(50000L))
-    time(s"frontier_bcast_${bt.get}")(
-      graft.algo.PageRank.runFrontier(edges, tol = 1e-6, maxIter = 100, broadcastTail = bt))
     import org.apache.spark.sql.functions._
     val j = keep("exact").withColumnRenamed("pr", "pe")
       .join(keep("frontier").withColumnRenamed("pr", "pf"), "vid")

@@ -25,41 +25,30 @@ object ConnectedComponents {
 
   /** @return (vid, component) for every vertex in `vertices`. */
   def run(edges: DataFrame, vertices: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    // localCheckpoint every round: each star pass references its input ~4×
-    // (sym + min-join), so without per-round truncation the logical plan grows
-    // ~16^rounds and OOMs the driver by round 3. The canonical edge leaf is
-    // planned with AQE off too: a lazy checkpoint of an adaptive plan runs
-    // its shuffle stages at once, a job before the signature's.
-    val e0 = IterativeRunner.rebase(edges, IterativeRunner.loopSession(spark, None))
+    val e0 = edges
       .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
+    // the first signature materializes the canonical edge leaf; its row
+    // count sizes the rounds' exchanges. A round is active while the
+    // signature changes: the star rounds have converged once it repeats.
     var sig = signature(e0)
-    // the star rounds plan in a loop session whose exchange width comes from
-    // the data: the first signature action materialized the edge leaf, so
-    // its row count is known
-    val session = IterativeRunner.loopSession(spark,
-      Some(graft.core.IterCache.adaptiveParts(spark, sig._1)))
-    var e = IterativeRunner.rebase(e0, session)
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      round += 1
-      val next = smallStar(largeStar(e).localCheckpoint(false)).localCheckpoint(false)
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      sig = nextSig
-      e = next
-    }
+    val stars = IterativeRunner.loop(e0, maxRounds,
+      shuffleParts = Some(graft.core.IterCache.adaptiveParts(edges.sparkSession, sig._1))) {
+      (e, _) => smallStar(largeStar(e))
+    } { next =>
+      val prev = sig
+      sig = signature(next)
+      if (sig == prev) 0L else 1L
+    }.state
     // Converged state is a forest of stars (src = component min, dst = member).
-    val labels = e.select(col("dst").as("vid"), col("src").as("component"))
-      .union(e.select(col("src").as("vid"), col("src").as("component")))
+    val labels = stars.select(col("dst").as("vid"), col("src").as("component"))
+      .union(stars.select(col("src").as("vid"), col("src").as("component")))
       .distinct()
-    IterativeRunner.rebase(vertices.select(col("vid"))
+    vertices.select(col("vid"))
       .join(labels, Seq("vid"), "left")
-      .select(col("vid"), coalesce(col("component"), col("vid")).as("component")), spark)
+      .select(col("vid"), coalesce(col("component"), col("vid")).as("component"))
   }
 
   /** Large-Star: every node's strictly-larger neighbors link to the minimum

@@ -109,8 +109,7 @@ object PageRank {
     * Why it matters at scale: the measured tolerance loop spends 43% of its
     * iterations (29 of 67 on the headline graph) with <0.03% of vertices
     * active — the exact recurrence pays the full edge pass anyway; this
-    * variant pays ~nothing (and on a cluster the shrinking frontier side of
-    * the join becomes broadcastable). Numbers in BASELINE.md §g.
+    * variant pays ~nothing. Numbers in BASELINE.md §g.
     *
     * Trade-off vs [[run]], measured on the 13.7M-edge headline graph:
     * frozen vertices hold rank constant while the exact recurrence keeps
@@ -130,8 +129,7 @@ object PageRank {
       maxIter: Int = 100,
       vertices: Option[DataFrame] = None,
       freezeFactor: Double = 0.01,
-      checkpointer: Option[Checkpointer] = None,
-      broadcastTail: Option[Long] = None): Result = {
+      checkpointer: Option[Checkpointer] = None): Result = {
     val (sym, parts) = symCache(edges)
     val freezeTol = tol * freezeFactor
     // state: (vid, pr, deg, sent = last contribution actually sent,
@@ -152,8 +150,6 @@ object PageRank {
     // Result.frontierSizes; `metrics.activeCount` records the stop
     // criterion's conv count (change ≥ tol), a strict subset of the frontier
     val frontierSizes = Vector.newBuilder[Long]
-    // last observed frontier size, for the broadcast-tail switch (below)
-    var lastFrontier = Long.MaxValue
     val res = IterativeRunner.loop(init, maxIter, checkpointer = checkpointer,
       shuffleParts = Some(parts)) { (state, _) =>
       // the active frontier publishes the CHANGE in its contribution
@@ -163,16 +159,7 @@ object PageRank {
         .select(col("vid").as("src"),
           (when(col("deg") > 0, col("pr") / col("deg")).otherwise(lit(0.0))
             - col("sent")).as("dc"))
-      // broadcast-tail switch (cluster-shape lever): once the frontier has
-      // shrunk below `broadcastTail`, ship it to every task instead of
-      // shuffling the edge side's join keys — on a cluster this removes the
-      // per-iteration exchange entirely for the long convergence tail.
-      // Local[32] A/B numbers in BASELINE.md §h. Default off: the exact
-      // shuffle-hash shape stays the measured/oracled path.
-      val frontierSide =
-        if (broadcastTail.exists(lastFrontier <= _)) broadcast(frontierDf)
-        else frontierDf.hint("shuffle_hash")
-      val dmsgs = sym.join(frontierSide, "src")
+      val dmsgs = sym.join(frontierDf.hint("shuffle_hash"), "src")
         .groupBy(col("dst").as("vid"))
         .agg(sum(col("dc")).as("dsum"))
       state
@@ -200,8 +187,7 @@ object PageRank {
       val r = next.agg(
         count(when(col("conv"), lit(1))).as("conv"),
         count(when(col("active"), lit(1))).as("act")).head()
-      lastFrontier = r.getLong(1)
-      frontierSizes += lastFrontier
+      frontierSizes += r.getLong(1)
       r.getLong(0)
     }
     sym.unpersist(false)

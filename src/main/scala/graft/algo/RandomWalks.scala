@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -48,15 +48,6 @@ object RandomWalks {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
 
-  /** The session a walk's steps plan in, sized by the cached neighbor
-    * index's row count (the count also materializes the cache, which the
-    * first step would anyway), and the index as a frame of it. */
-  private def walkSession(index: DataFrame): (SparkSession, DataFrame) = {
-    val spark = index.sparkSession
-    val session = IterativeRunner.loopSession(spark, Some(IterCache.adaptiveParts(spark, index.count())))
-    (session, IterativeRunner.rebase(index, session))
-  }
-
   /** Portable per-(walk, step, salt) pseudo-uniform in [0, 2000003): pure
     * integer arithmetic (squared mixing like Similarity.planeComponent), so
     * the DuckDB oracle replays the exact same walks — q_deepwalk is a full
@@ -94,27 +85,21 @@ object RandomWalks {
     // start degrees are derived FROM the cached index (identical rows: count
     // of sym edges per src) instead of re-deriving the upstream edge table
     // a second time (round 6)
-    val (session, idx) = walkSession(cached)
-    val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-      .crossJoin(session.range(walksPerVertex).select(col("id").as("rep")))
+    val starts = cached.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
+      .crossJoin(edges.sparkSession.range(walksPerVertex).select(col("id").as("rep")))
       .select(
         (col("vid") * walksPerVertex + col("rep")).as("walk_id"),
         col("vid").as("cur"), col("deg").as("cur_deg"),
         array(col("vid")).as("path"))
-    var walks = starts.localCheckpoint(false)
-    for (step <- 1 until pathLength) {
+    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = walkParts(cached)) { (w, step) =>
       val pick = draw(col("walk_id"), step, col("cur_deg"), seed)
-      val drawn = walks
-        .join(idx, walks("cur") === idx("src") && pick === idx("idx"))
+      w.join(cached, w("cur") === cached("src") && pick === cached("idx"))
         .select(col("walk_id"), col("dst").as("cur"), col("dst_deg").as("cur_deg"),
           concat(col("path"), array(col("dst"))).as("path"))
-      walks = drawn.localCheckpoint(false)
-    }
-    walks.count() // materialize the lazy checkpoint chain while idx is cached
+    }(_ => 1L).state
+    walks.count() // materialize the lazy checkpoint chain while the index is cached
     cached.unpersist(false)
-    IterativeRunner.rebase(
-      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
-      edges.sparkSession)
+    walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
   }
 
   /** Node2Vec p/q-biased second-order walk via bounded rejection sampling
@@ -142,31 +127,31 @@ object RandomWalks {
     // round 6: the membership set and the start degrees are PROJECTIONS of
     // the cached index (same symmetrized rows) — the old code re-derived the
     // upstream edge table twice more and paid a second cache build
-    val (session, idx) = walkSession(cached)
-    val nbrSet = idx
+    val nbrSet = cached
       .select(col("src").as("m_src"), col("dst").as("m_dst"), lit(true).as("in_nbr"))
-    // step 1: uniform first hop
-    val starts = idx.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-      .crossJoin(session.range(walksPerVertex).select(col("id").as("rep")))
+    // step 1: uniform first hop (the loop's initial state)
+    val starts = cached.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
+      .crossJoin(edges.sparkSession.range(walksPerVertex).select(col("id").as("rep")))
       .select((col("vid") * walksPerVertex + col("rep")).as("walk_id"),
         col("vid").as("cur"), col("deg").as("cur_deg"), array(col("vid")).as("path"))
-    var walks = starts
-      .join(idx, col("cur") === idx("src") && draw(col("walk_id"), 1, col("cur_deg"), seed) === idx("idx"))
+    val firstHop = starts
+      .join(cached, col("cur") === cached("src") &&
+        draw(col("walk_id"), 1, col("cur_deg"), seed) === cached("idx"))
       .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"),
         col("dst_deg").as("cur_deg"), concat(col("path"), array(col("dst"))).as("path"))
-      .localCheckpoint(false)
-    for (step <- 2 until pathLength) {
+    val walks = IterativeRunner.loop(firstHop, pathLength - 2, shuffleParts = walkParts(cached)) { (w, iter) =>
+      val step = iter + 1
       // one row per bounded rejection attempt; all attempts resolve in a
       // single index join + membership join, then collapse to the first
       // accepted candidate (the last attempt is force-accepted)
-      val cands = walks
+      val cands = w
         .select(col("walk_id"), col("prev"), col("cur"), col("cur_deg"), col("path"),
           explode(sequence(lit(0), lit(attempts - 1))).as("t"))
         .withColumn("pick", element_at(
           array((0 until attempts)
             .map(a => draw(col("walk_id"), step, col("cur_deg"), seed, a * 1009L)): _*),
           col("t") + 1))
-        .join(idx, col("cur") === idx("src") && col("pick") === idx("idx"))
+        .join(cached, col("cur") === cached("src") && col("pick") === cached("idx"))
         .select(col("walk_id"), col("prev"), col("cur"), col("path"), col("t"),
           col("dst").as("cand"), col("dst_deg").as("cand_deg"))
         .join(nbrSet, col("prev") === col("m_src") && col("cand") === col("m_dst"), "left")
@@ -178,7 +163,7 @@ object RandomWalks {
         .when(coalesce(col("in_nbr"), lit(false)), lit(1.0 / top))
         .otherwise(lit(1.0 / q / top))
       val accepted = (col("t") === (attempts - 1)) || (u < acceptProb)
-      walks = cands
+      cands
         .select(col("walk_id"),
           struct(when(accepted, col("t")).otherwise(lit(Int.MaxValue)).as("prio"),
             col("cur"), col("cand"), col("cand_deg"), col("path")).as("s"))
@@ -187,13 +172,10 @@ object RandomWalks {
         .select(col("walk_id"), col("s.cur").as("prev"), col("s.cand").as("cur"),
           col("s.cand_deg").as("cur_deg"),
           concat(col("s.path"), array(col("s.cand"))).as("path"))
-        .localCheckpoint(false)
-    }
+    }(_ => 1L).state
     walks.count() // materialize the lazy checkpoint chain while caches live
     cached.unpersist(false)
-    IterativeRunner.rebase(
-      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
-      edges.sparkSession)
+    walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
   }
 
   /** MetaPath2Vec: type-constrained walk (`MetaPath2Vec.scala:151-171`): at
@@ -216,25 +198,25 @@ object RandomWalks {
       .select(col("src"), col("kind"), col("idx"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // round 6: the per-(src, kind) degrees come from the cached index
-    // (identical rows) instead of a second symK pass + second cache
-    val (session, idx) = walkSession(cached)
+    // (identical rows) instead of a second symK pass + second cache; sized
+    // first, so the sizing count fills the cache degK reads
+    val parts = walkParts(cached)
     // leaf: every walk step probes degK — without it the per-(src, kind)
     // aggregate over the FULL cached index would re-run once per step
     // (round-6 review finding; the leaf materializes it once)
-    val degK = idx.groupBy("src", "kind").agg(count(lit(1)).as("deg"))
+    val degK = cached.groupBy("src", "kind").agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
-    val starts = IterativeRunner.rebase(vertices, session).where(col("kind") === metaPath.head)
+    val starts = vertices.where(col("kind") === metaPath.head)
       .select(col("vid").as("walk_id"), col("vid").as("cur"), array(col("vid")).as("path"),
         lit(false).as("stopped"))
-    var walks = starts.localCheckpoint(false)
-    for (step <- 1 until pathLength) {
+    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = parts) { (w, step) =>
       val wantKind = metaPath(step % metaPath.length)
       val dK = degK.where(col("kind") === wantKind).select(col("src").as("d_src"), col("deg"))
-      val iK = idx.where(col("kind") === wantKind)
+      val iK = cached.where(col("kind") === wantKind)
         .select(col("src").as("i_src"), col("idx"), col("dst"))
-      val withDeg = walks.join(dK, walks("cur") === col("d_src"), "left")
+      val withDeg = w.join(dK, w("cur") === col("d_src"), "left")
       val pick = draw(col("walk_id"), step, col("deg"), seed)
-      val drawn = withDeg
+      withDeg
         .join(iK, col("cur") === col("i_src") && pick === col("idx"), "left")
         .select(
           col("walk_id"),
@@ -242,12 +224,14 @@ object RandomWalks {
           when(col("stopped") || col("deg").isNull, col("path"))
             .otherwise(concat(col("path"), array(col("dst")))).as("path"),
           (col("stopped") || col("deg").isNull).as("stopped"))
-      walks = drawn.localCheckpoint(false)
-    }
+    }(_ => 1L).state
     walks.count() // materialize the lazy checkpoint chain while caches live
     cached.unpersist(false)
-    IterativeRunner.rebase(
-      walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path")),
-      edges.sparkSession)
+    walks.select(col("walk_id"), element_at(col("path"), 1).as("start"), col("path"))
   }
+
+  /** A walk loop's exchange width, from the cached index's row count (the
+    * count also materializes the cache, which the first step would anyway). */
+  private def walkParts(index: DataFrame): Option[Int] =
+    Some(IterCache.adaptiveParts(index.sparkSession, index.count()))
 }

@@ -19,11 +19,13 @@ import org.apache.spark.sql.internal.SQLConf
 final case class IterMetrics(iter: Int, activeCount: Long, wallMs: Long,
     planMs: Long = 0L, rebound: Boolean = false)
 
-/** Driver loop shared by every iterative algorithm (PageRank / CC / LPA /
-  * walks): persist-swap state management, convergence action, and lineage
-  * truncation. The per-iteration body is ONE declarative Catalyst plan
-  * (join → partial+final aggregate → join), so whole-stage codegen applies
-  * to every superstep.
+/** Driver loop shared by every iterative algorithm (PageRank, both CC
+  * forms, LPA, k-core, HITS, shortest paths, the three walks and dedup's
+  * canonical propagation; SVD++'s SGD, which holds a cache inside each
+  * iteration, still drives its own loop): persist-swap state management,
+  * convergence action, and lineage truncation. The per-iteration body is
+  * ONE declarative Catalyst plan (join → partial+final aggregate → join),
+  * so whole-stage codegen applies to every superstep.
   *
   * Plan once, rebind per superstep: the state is always a leaf (a
   * `LogicalRDD` over locally checkpointed rows), so consecutive supersteps
@@ -32,7 +34,8 @@ final case class IterMetrics(iter: Int, activeCount: Long, wallMs: Long,
   * still calls `step` (its analyzed plan is what shows the swap is safe) and,
   * when that plan matches, runs the cached physical plan with the new
   * state's rows swapped in — no optimization, physical planning or code
-  * compilation. A superstep whose plan differs (a broadcast switch, an
+  * compilation. A superstep whose plan differs (another join hint, a
+  * literal that changes per superstep such as a walk's step number, an
   * in-step checkpoint leaf, a leaf of another schema, partitioning or size)
   * is planned afresh and becomes the cached plan. Results are the same
   * either way; `IterMetrics.rebound` records which path each superstep took.
@@ -76,7 +79,7 @@ object IterativeRunner {
     * The caller's session is never changed, so queries running next to the
     * loop on it keep their own settings. Make one per loop call: a clone
     * does not see listeners registered on `spark` after it was made. */
-  def loopSession(spark: SparkSession, parts: Option[Int]): SparkSession = {
+  private[graft] def loopSession(spark: SparkSession, parts: Option[Int]): SparkSession = {
     val child = GraftShim.cloneSession(spark)
     val conf = child.asInstanceOf[classic.SparkSession].sessionState.conf
     conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
@@ -86,7 +89,7 @@ object IterativeRunner {
 
   /** `df` as a frame of `session`: its analyzed plan, optimized and planned
     * under that session's settings. */
-  def rebase(df: DataFrame, session: SparkSession): DataFrame =
+  private[graft] def rebase(df: DataFrame, session: SparkSession): DataFrame =
     if (df.sparkSession eq session) df else GraftShim.ofRows(session, df.queryExecution.analyzed)
 
   /** Runs supersteps until `maxIter` or until `activeCount` is 0. Every
@@ -113,7 +116,10 @@ object IterativeRunner {
     *                     OOM the driver around iteration 10 — measured, not
     *                     hypothetical).
     * @param activeCount  action deciding convergence: number of still-active
-    *                     vertices in the NEW state; 0 stops the loop.
+    *                     vertices in the NEW state; 0 stops the loop. A
+    *                     constant runs exactly `maxIter` supersteps and no
+    *                     job: the states' checkpoints materialize in the
+    *                     first job that reads the returned state.
     */
   def loop(
       init: DataFrame,

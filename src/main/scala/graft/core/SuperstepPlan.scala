@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSeq, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, ResolvedHint}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, SQLExecution, SparkPlan}
@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
 private[core] final class SuperstepPlan private (
     schema: StructType,
     stats: (BigInt, Option[BigInt]),
-    shape: LogicalPlan,
+    shape: (LogicalPlan, Seq[HintInfo]),
     plan: SparkPlan,
     sentinel: RDD[InternalRow]) {
 
@@ -78,10 +78,13 @@ private[core] object SuperstepPlan {
   /** `step`'s analyzed plan in canonical form, with the state's rows
     * replaced by `sentinel` and every RDD leaf's partitioning and ordering
     * written by column position (a leaf's own attribute ids are fresh in
-    * every superstep). */
-  private def shape(step: DataFrame, state: RDD[InternalRow], sentinel: RDD[InternalRow]): LogicalPlan = {
+    * every superstep), and its join hints, which the canonical form drops
+    * but which choose the physical join. */
+  private def shape(step: DataFrame, state: RDD[InternalRow],
+      sentinel: RDD[InternalRow]): (LogicalPlan, Seq[HintInfo]) = {
     val session = step.sparkSession.asInstanceOf[classic.SparkSession]
-    step.queryExecution.analyzed.transformUp {
+    val analyzed = step.queryExecution.analyzed
+    val canonical = analyzed.transformUp {
       case l: LogicalRDD =>
         l.copy(
           rdd = if (l.rdd eq state) sentinel else l.rdd,
@@ -93,6 +96,7 @@ private[core] object SuperstepPlan {
           outputOrdering = l.outputOrdering.map(QueryPlan.normalizeExpressions(_, new AttributeSeq(l.output))))(
           session, None, None)
     }.canonicalized
+    (canonical, analyzed.collect { case h: ResolvedHint => h.hints })
   }
 
   private def readsDerived(plan: SparkPlan, state: RDD[_], plain: Boolean,

@@ -3,7 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.IterativeRunner
+import graft.algo.ConnectedComponents
+import graft.derive.LinkGraph
 import graft.text.TextStats
 
 /** Document deduplication operators for a large-scale training-data pipeline:
@@ -278,9 +279,10 @@ object Dedup {
     * loudly instead of silently shipping a split clustering, and
     * `escalateUnconverged = true` keeps propagating to fixpoint (correct
     * result, oracle-replayable only when the guard never fired). Scale shape
-    * per round: one edge⋈state shuffle-hash join + one partial-agg min — the
-    * PageRank superstep shape over a pair graph that is orders of magnitude
-    * smaller than the corpus. */
+    * per round: the min-flood superstep of
+    * [[ConnectedComponents.minPropagation]] (frontier⋈pairs join, partial-agg
+    * min, state join) over a pair graph that is orders of magnitude smaller
+    * than the corpus. */
   def clusters(
       docs: DataFrame,
       n: Int = 3,
@@ -297,62 +299,42 @@ object Dedup {
 
   /** Min-canonical propagation over an explicit verified pair list — the
     * clustering tail of [[clusters]], separated so the diameter guard is
-    * testable on a planted pair graph. Returns (assignment, unconverged):
+    * testable on a planted pair graph. `pairs` (doc_a, doc_b) must name
+    * only docs of `docs`, as [[minhashLsh]]`(docs)` does. The propagation
+    * is [[ConnectedComponents.minPropagation]] capped at `rounds`
+    * supersteps: min is exact, so its frontier supersteps give the labels
+    * of as many synchronous full rounds, and stopping early at the
+    * fixpoint changes nothing. Returns (assignment, unconverged):
     * `unconverged` is the number of docs whose canonical id would STILL
     * change given one more round — 0 iff `rounds` covered every component's
     * diameter. Non-zero means the clustering is NOT transitively closed
     * (split canonical ids); it is printed to stderr, and with `escalate`
-    * propagation continues in `rounds`-sized chunks until the fixpoint
-    * (each chunk re-probes — convergence-driven, so no longer replayable by
-    * a fixed-round oracle; the default flow keeps fixed rounds + guard). */
+    * the propagation runs again to the fixpoint (convergence-driven, so no
+    * longer replayable by a fixed-round oracle; the default flow keeps fixed
+    * rounds + guard). */
   def propagateCanonical(
       pairs: DataFrame,
       docs: DataFrame,
       rounds: Int = 8,
       escalate: Boolean = false): (DataFrame, Long) = {
-    val spark = pairs.sparkSession
-    val pairGraph = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(false) // referenced every round
-    // the rounds plan in a loop session (round 6) whose shuffle width comes
-    // from the pair-graph size (the count materializes the leaf, which the
-    // first round needs anyway)
-    val session = IterativeRunner.loopSession(spark,
-      Some(graft.core.IterCache.adaptiveParts(spark, pairGraph.count())))
-    val sym = IterativeRunner.rebase(pairGraph, session)
-    var state = sym.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("canonical"))
-      .localCheckpoint(false)
-    def msgs(st: DataFrame): DataFrame = sym
-      .join(st.select(col("doc_id").as("src"), col("canonical").as("c"))
-        .hint("shuffle_hash"), "src")
-      .groupBy(col("dst").as("doc_id")).agg(min(col("c")).as("mc"))
-    def oneRound(st: DataFrame): DataFrame =
-      st.join(msgs(st).hint("shuffle_hash"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("canonical"), coalesce(col("mc"), col("canonical"))).as("canonical"))
-        .localCheckpoint(false) // plan truncation per round
-    // probe: docs whose canonical would still drop given one more round —
-    // one cheap action over the (tiny) pair-involved state
-    def probe(st: DataFrame): Long =
-      st.join(msgs(st).hint("shuffle_hash"), Seq("doc_id"), "left")
-        .where(col("mc") < col("canonical")).count()
-    for (_ <- 1 to rounds) state = oneRound(state)
-    // the guard count: what the FIXED round budget left uncovered
-    val unconverged = probe(state)
-    if (unconverged > 0) {
+    val pairEdges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    def propagate(maxIter: Int): DataFrame = ConnectedComponents.minPropagation(
+      pairEdges, docs.select(col("doc_id").as("vid")), maxIter)
+    val labels = propagate(rounds)
+    // the guard count: docs whose canonical would still drop given one more
+    // round — one cheap action over the (tiny) pair graph
+    val unconverged = LinkGraph.symmetrize(pairEdges)
+      .join(labels.select(col("vid").as("src"), col("component").as("c")), "src")
+      .groupBy(col("dst").as("vid")).agg(min(col("c")).as("mc"))
+      .join(labels, "vid")
+      .where(col("mc") < col("component")).count()
+    val out = if (unconverged > 0) {
       System.err.println(s"[dedup.clusters] WARNING: $unconverged docs unconverged " +
         s"after $rounds rounds (pair-graph component diameter exceeds rounds); " +
         (if (escalate) "escalating to fixpoint" else "canonical ids are SPLIT"))
-      var remaining = unconverged
-      while (escalate && remaining > 0) {
-        for (_ <- 1 to rounds) state = oneRound(state)
-        remaining = probe(state)
-      }
-    }
-    val out = docs.select(col("doc_id")).join(state.hint("shuffle_hash"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("canonical"), col("doc_id")).as("canonical_id"))
-    (IterativeRunner.rebase(out, spark), unconverged)
+      if (escalate) propagate(Int.MaxValue) else labels
+    } else labels
+    (out.select(col("vid").as("doc_id"), col("component").as("canonical_id")), unconverged)
   }
 
   /** 60-bit SimHash signature per doc, token-weighted (each occurrence votes

@@ -71,21 +71,6 @@ class PageRankSpec extends SparkTestBase {
     assert(vsOracle <= 5e-6, s"max |frontier-power| = $vsOracle")
   }
 
-  test("frontier broadcast-tail arm matches the shuffle-hash arm") {
-    // broadcastTail = MaxValue forces the broadcast plan from iteration 2 on
-    // (iteration 1 has no observed frontier size yet); the join strategy must
-    // not change results beyond aggregation-order float noise, nor the
-    // iteration schedule on this fixture
-    val a = PageRank.runFrontier(GraphFixture.graph.edges, tol = 1e-6, maxIter = 100)
-    val b = PageRank.runFrontier(GraphFixture.graph.edges, tol = 1e-6, maxIter = 100,
-      broadcastTail = Some(Long.MaxValue))
-    assert(a.iterations == b.iterations)
-    val am = a.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bm = b.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val maxDiff = am.map { case (v, x) => math.abs(bm(v) - x) }.max
-    assert(maxDiff <= 1e-9, s"max |broadcast-shufflehash| = $maxDiff")
-  }
-
   test("PageRank seeds isolated vertices when a vertex table is supplied") {
     import spark.implicits._
     val edges = Seq((1L, 2L, 1L)).toDF("src", "dst", "weight")

@@ -9,14 +9,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, ShortestPaths}
+import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, RandomWalks, ShortestPaths}
 import graft.core.{Checkpointer, IterCache, IterMetrics, IterativeRunner}
 import graft.dedup.Dedup
 
 /** Plan once, rebind per superstep: every loop gives bit-identical results
   * whether supersteps rebind the cached plan or are planned afresh, and the
-  * supersteps that cannot rebind (an in-step checkpoint leaf, a plan-shape
-  * switch) fall back to planning. */
+  * supersteps that cannot rebind (an in-step checkpoint leaf, a changed
+  * plan) fall back to planning. */
 class RebindSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -77,18 +77,57 @@ class RebindSpec extends SparkTestBase {
     assert(steps.length == 6 && steps.forall(!_.rebound), steps)
   }
 
-  test("runFrontier's broadcast switch is planned afresh, then rebound") {
-    // superstep 1 sees no frontier size yet (shuffle-hash side); from 2 on
-    // the frontier side is broadcast
-    def run() = PageRank.runFrontier(edges, tol = 1e-6, maxIter = 100,
-      broadcastTail = Some(Long.MaxValue - 1))
-    val (planned, _) = arm(rebind = false)(bits(run().ranks))
-    val (rebound, steps) = arm(rebind = true)(bits(run().ranks))
+  test("a superstep whose plan changes is planned afresh, then rebound") {
+    // the step gains a broadcast hint from superstep `hintFrom` on: the
+    // physical plan (a broadcast join either way) and the state's
+    // partitioning stay, only the analyzed plan changes
+    val init = (1L to 20L).map(v => (v, v.toDouble)).toDF("vid", "value")
+    val side = (1L to 20L).map(v => (v, (v % 3).toDouble)).toDF("vid", "w")
+    def run(hintFrom: Int) = IterativeRunner.loop(init, maxIter = 5) { (state, iter) =>
+      state.join(if (iter >= hintFrom) broadcast(side) else side, "vid")
+        .select(col("vid"), (col("value") * 0.5 + col("w")).as("value"))
+    }(_ => 1L).state
+    val (planned, _) = arm(rebind = false)(bits(run(hintFrom = 2)))
+    val (rebound, steps) = arm(rebind = true)(bits(run(hintFrom = 2)))
     assert(rebound == planned)
-    assert(steps.length > 3)
-    assert(!steps(1).rebound, "the switch superstep must be planned")
+    assert(steps.map(_.iter) == (1 to 5))
+    assert(!steps(1).rebound, "the superstep whose plan changed must be planned")
     assert(steps.drop(2).forall(_.rebound), steps)
+    // the same loop without the change rebinds superstep 2
+    val (_, unchanged) = arm(rebind = true)(bits(run(hintFrom = 1)))
+    assert(unchanged.drop(1).forall(_.rebound), unchanged)
   }
+
+  private lazy val chainPairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+
+  /** Loops that drive the runner through an operator: name, the number of
+    * supersteps expected (None: until the signature repeats), the first
+    * superstep from which every later one rebinds (None: not asserted), and
+    * the run. */
+  private val runnerLoops: Seq[(String, Option[Int], Option[Int], () => DataFrame)] = Seq(
+    ("ConnectedComponents.run", None, Some(3), () => ConnectedComponents.run(edges, vertices)),
+    ("Dedup.propagateCanonical", Some(8), Some(3),
+      () => Dedup.propagateCanonical(chainPairs, (0L until 12L).toDF("doc_id"), rounds = 8)._1),
+    ("RandomWalks.deepWalk", Some(5), None, () => RandomWalks.deepWalk(edges, pathLength = 6)),
+    ("RandomWalks.node2vec", Some(4), None, () => RandomWalks.node2vec(edges, pathLength = 6)),
+    ("RandomWalks.metaPath2Vec", Some(5), None,
+      () => RandomWalks.metaPath2Vec(edges, vertices, Seq("conv", "tool"), pathLength = 6)))
+
+  for ((name, supersteps, settledFrom, run) <- runnerLoops)
+    test(s"$name runs through the runner: bit-identical with and without rebinding") {
+      val (planned, plannedSteps) = arm(rebind = false)(bits(run()))
+      val (rebound, reboundSteps) = arm(rebind = true)(bits(run()))
+      assert(rebound == planned)
+      assert(reboundSteps.map(s => (s.iter, s.activeCount)) == plannedSteps.map(s => (s.iter, s.activeCount)))
+      assert(reboundSteps.map(_.iter) == (1 to reboundSteps.length), reboundSteps)
+      supersteps match {
+        case Some(n) => assert(reboundSteps.length == n, reboundSteps)
+        // the star rounds stop at the first round whose signature repeats
+        case None => assert(reboundSteps.map(_.activeCount) ==
+          Seq.fill(reboundSteps.length - 1)(1L) :+ 0L, reboundSteps)
+      }
+      settledFrom.foreach(k => assert(reboundSteps.drop(k - 1).forall(_.rebound), reboundSteps))
+    }
 
   test("the superstep after a durable save reads the in-memory leaf, no file scan") {
     val root = Files.createTempDirectory("graft-rebind").toString

@@ -1,22 +1,25 @@
 // Capture the PageRank-superstep physical plan (the shared shape of every
 // iterative algo) at a given scale factor, into
 // plans/r06/superstep_<suffix>.txt: the edge cache from IterCache.byKey,
-// planned in the loop session IterativeRunner.loopSession makes for it, so
-// the Exchange partition counts are the loop's scale-adaptive ones.
+// planned with the settings of a superstep loop's session (AQE off, the
+// cache's partition count as the shuffle width), so the Exchange partition
+// counts are the loop's scale-adaptive ones.
 //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 GRAFT_PLAN_SUFFIX=before \
 //   SPARK_GRAFT_CPUS=32 /opt/spark/bin/spark-shell --master "local[32]" \
 //     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
 //     --driver-class-path target/scala-2.13/classes -i tools/dump_superstep.scala
 {
   import org.apache.spark.sql.functions._
-  import graft.core.{IterCache, IterativeRunner}
+  import graft.core.IterCache
   val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
   spark.sparkContext.setLogLevel("ERROR")
   val g = graft.derive.LinkGraph.fromTranscripts(
     graft.derive.LinkGraph.transcriptsFromEvents(spark, sfDir))
-  val (cached, parts) = IterCache.byKey(graft.derive.LinkGraph.symmetrize(g.edges), "src")
-  val sym = IterativeRunner.rebase(cached, IterativeRunner.loopSession(spark, Some(parts)))
+  val (sym, parts) = IterCache.byKey(graft.derive.LinkGraph.symmetrize(g.edges), "src")
+  // this script owns its shell session, so it sets the loop settings there
+  spark.conf.set("spark.sql.adaptive.enabled", "false")
+  spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
   sym.count()
   val state = sym.groupBy(col("src").as("vid"))
     .agg(count(lit(1)).cast("double").as("deg"))
