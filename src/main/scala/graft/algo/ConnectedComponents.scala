@@ -36,7 +36,7 @@ object ConnectedComponents {
     var sig = signature(e0)
     val stars = IterativeRunner.loop(e0, maxRounds,
       shuffleParts = Some(graft.core.IterCache.adaptiveParts(edges.sparkSession, sig._1))) {
-      (e, _) => smallStar(largeStar(e))
+      e => smallStar(largeStar(e))
     } { next =>
       val prev = sig
       sig = signature(next)
@@ -86,22 +86,34 @@ object ConnectedComponents {
   }
 
   /** Pregel min-label flood with frontier semi-join; cross-check for [[run]]. */
-  def minPropagation(edges: DataFrame, vertices: DataFrame, maxIter: Int = 50): DataFrame = {
+  def minPropagation(edges: DataFrame, vertices: DataFrame, maxIter: Int = 50): DataFrame =
+    minFlood(edges, vertices, maxIter, keepPrevious = false).state.select("vid", "component")
+
+  /** The flood's loop, with state (vid, component, active) and, with
+    * `keepPrevious`, each vertex's component before the last superstep
+    * (`previous`). Every vertex is active in superstep 1, so after superstep
+    * s a vertex with a lower-labelled neighbour always has an active one,
+    * and superstep s+1 lowers exactly those vertices: its active count is
+    * the number of vertices s rounds leave unsettled. */
+  private[graft] def minFlood(edges: DataFrame, vertices: DataFrame, maxIter: Int,
+      keepPrevious: Boolean): IterativeRunner.Result = {
     val (sym, parts) = graft.core.IterCache.byKey(LinkGraph.symmetrize(edges), "src")
-    val init = vertices.select(col("vid"), col("vid").as("component"), lit(true).as("active"))
+    val previous = if (keepPrevious) Seq(col("component").as("previous")) else Nil
+    val init = vertices.select(Seq(col("vid"), col("vid").as("component"), lit(true).as("active")) ++
+      previous: _*)
     val res = IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val msgs = sym
         .join(state.where(col("active")).select(col("vid").as("src"), col("component"))
           .hint("shuffle_hash"), "src")
         .groupBy(col("dst").as("vid"))
         .agg(min(col("component")).as("m"))
-      state.join(msgs, Seq("vid"), "left").select(
+      state.join(msgs, Seq("vid"), "left").select(Seq(
         col("vid"),
         least(col("component"), coalesce(col("m"), col("component"))).as("component"),
-        (coalesce(col("m"), col("component")) < col("component")).as("active"))
+        (coalesce(col("m"), col("component")) < col("component")).as("active")) ++ previous: _*)
     }(IterativeRunner.CountTrue("active"))
     sym.unpersist(false)
-    res.state.select("vid", "component")
+    res
   }
 }

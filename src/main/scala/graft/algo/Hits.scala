@@ -42,7 +42,7 @@ object Hits {
     val init = vertices.select(col("vid"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
     val res = graft.core.IterativeRunner.loop(init, iterations,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val authRaw = bySrc
         .join(state.select(col("vid").as("src"), col("hub")).hint("shuffle_hash"), "src")
         .groupBy(col("dst").as("vid"))

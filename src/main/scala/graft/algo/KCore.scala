@@ -45,7 +45,7 @@ object KCore {
 
     val init = vertices.select(col("vid"), lit(true).as("alive"), lit(true).as("removed"))
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val deg = survivorDegrees(state.where(col("alive")))
       state.join(deg, Seq("vid"), "left").select(
         col("vid"),

@@ -25,7 +25,7 @@ object LabelPropagation {
   def run(edges: DataFrame, vertices: DataFrame, iterations: Int = 5): DataFrame = {
     val (sym, parts) = graft.core.IterCache.byKey(LinkGraph.symmetrize(edges), "src")
     val init = vertices.select(col("vid"), col("vid").as("lab"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       val counts = sym
         .join(state.select(col("vid").as("src"), col("lab")).hint("shuffle_hash"), "src")
         .groupBy(col("dst"), col("lab"))

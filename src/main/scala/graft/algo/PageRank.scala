@@ -91,7 +91,7 @@ object PageRank {
     val (sym, parts) = symCache(edges)
     val res = IterativeRunner.loop(initState(sym, vertices), maxIter,
       checkpointer = checkpointer, shuffleParts = Some(parts)) {
-      (state, _) => step(sym, state, resetProb, tol)
+      state => step(sym, state, resetProb, tol)
     }(IterativeRunner.CountTrue("active"))
     sym.unpersist(false)
     Result(res.state.select("vid", "pr"), res.iterations, res.metrics)
@@ -151,7 +151,7 @@ object PageRank {
     // criterion's conv count (change ≥ tol), a strict subset of the frontier
     val frontierSizes = Vector.newBuilder[Long]
     val res = IterativeRunner.loop(init, maxIter, checkpointer = checkpointer,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       // the active frontier publishes the CHANGE in its contribution
       // (iteration 1: everyone is active with sent=0 → full sums establish
       // msum, identically to the exact first superstep)
@@ -232,7 +232,7 @@ object PageRank {
     val init = symw.groupBy(col("src").as("vid"))
       .agg(sum(col("weight")).cast("double").as("wdeg"))
       .select(col("vid"), lit(1.0).as("pr"), col("wdeg"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       val msgs = symw
         .join(state.select(col("vid").as("src"), (col("pr") / col("wdeg")).as("contrib"))
           .hint("shuffle_hash"), "src")
@@ -259,7 +259,7 @@ object PageRank {
       .join(sources.select(col("vid"), lit(1.0).as("r0")), Seq("vid"), "left")
       .select(col("vid"), coalesce(col("r0"), lit(0.0)).as("r0"),
         coalesce(col("r0"), lit(0.0)).as("pr"), col("deg"))
-    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { (state, _) =>
+    val res = IterativeRunner.loop(init, iterations, shuffleParts = Some(parts)) { state =>
       state
         .join(messageSums(sym, state).hint("shuffle_hash"), Seq("vid"), "left")
         .select(col("vid"), col("r0"),
@@ -280,7 +280,7 @@ object PageRank {
       checkpointer: Option[Checkpointer] = None): DataFrame = {
     val (sym, parts) = symCache(edges)
     val res = IterativeRunner.loop(initState(sym, vertices), iterations,
-      checkpointer = checkpointer, shuffleParts = Some(parts)) { (state, _) =>
+      checkpointer = checkpointer, shuffleParts = Some(parts)) { state =>
       step(sym, state, resetProb, tol = 0.0)
     } { _ => 1L } // no early exit: run exactly `iterations` supersteps
     sym.unpersist(false)

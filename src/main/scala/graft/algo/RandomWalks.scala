@@ -91,7 +91,7 @@ object RandomWalks {
         (col("vid") * walksPerVertex + col("rep")).as("walk_id"),
         col("vid").as("cur"), col("deg").as("cur_deg"),
         array(col("vid")).as("path"))
-    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = walkParts(cached)) { (w, step) =>
+    val walks = IterativeRunner.loopNumbered(starts, pathLength - 1, shuffleParts = walkParts(cached)) { (w, step) =>
       val pick = draw(col("walk_id"), step, col("cur_deg"), seed)
       w.join(cached, w("cur") === cached("src") && pick === cached("idx"))
         .select(col("walk_id"), col("dst").as("cur"), col("dst_deg").as("cur_deg"),
@@ -139,7 +139,7 @@ object RandomWalks {
         draw(col("walk_id"), 1, col("cur_deg"), seed) === cached("idx"))
       .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"),
         col("dst_deg").as("cur_deg"), concat(col("path"), array(col("dst"))).as("path"))
-    val walks = IterativeRunner.loop(firstHop, pathLength - 2, shuffleParts = walkParts(cached)) { (w, iter) =>
+    val walks = IterativeRunner.loopNumbered(firstHop, pathLength - 2, shuffleParts = walkParts(cached)) { (w, iter) =>
       val step = iter + 1
       // one row per bounded rejection attempt; all attempts resolve in a
       // single index join + membership join, then collapse to the first
@@ -209,7 +209,7 @@ object RandomWalks {
     val starts = vertices.where(col("kind") === metaPath.head)
       .select(col("vid").as("walk_id"), col("vid").as("cur"), array(col("vid")).as("path"),
         lit(false).as("stopped"))
-    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = parts) { (w, step) =>
+    val walks = IterativeRunner.loopNumbered(starts, pathLength - 1, shuffleParts = parts) { (w, step) =>
       val wantKind = metaPath(step % metaPath.length)
       val dK = degK.where(col("kind") === wantKind).select(col("src").as("d_src"), col("deg"))
       val iK = cached.where(col("kind") === wantKind)

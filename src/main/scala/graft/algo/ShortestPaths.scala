@@ -47,7 +47,7 @@ object ShortestPaths {
         coalesce(col("is_src"), lit(false)).as("active"))
 
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val msgs = sym
         .join(state.where(col("active")).select(col("vid").as("src"), col("dist"))
           .hint("shuffle_hash"), "src")
@@ -90,7 +90,7 @@ object ShortestPaths {
       lit(0L).as("dist"), lit(true).as("active"))
 
     val res = graft.core.IterativeRunner.loop(init, maxIter,
-      shuffleParts = Some(parts)) { (state, _) =>
+      shuffleParts = Some(parts)) { state =>
       val msgs = sym
         .join(state.where(col("active"))
           .select(col("vid").as("src"), col("lm"), col("dist")).hint("shuffle_hash"), "src")

@@ -14,7 +14,8 @@ import org.apache.spark.storage.StorageLevel
   *     query's plan against each cache entry's plan — with a large plan under
   *     the cache this is a serial driver cost paid once per iteration, and it
   *     dominated the loop before truncation. DISK_ONLY keeps the row-format
-  *     checkpoint off the heap (it is read exactly once).
+  *     checkpoint off the heap (it is read only by the sizing count and the
+  *     cache build).
   *  2. `repartition(key)`: the loop's equi-join key; every superstep reuses
   *     this exchange so only the vertex-sized side shuffles per iteration.
   *  3. Dataset `persist()` on top: columnar compressed batches (~10× less
@@ -99,19 +100,23 @@ object IterCache {
     if (ordered) pairs2 / 2L else pairs2
   }
 
-  /** The cache itself: the eager DISK_ONLY leaf, hash-repartitioned by
-    * `key` and persisted. The partition count is `parts` when given (a
-    * sibling cache's count, so two caches of one loop co-partition without
-    * a second sizing scan), else [[adaptiveParts]] of the leaf's row count
-    * (one cheap scan of the just-written checkpoint — ~0.1 s at 13.7M rows,
-    * negligible against any loop that follows). Returns (cached frame,
-    * partition count) so the caller can pin the loop's OTHER exchanges
-    * (state shuffles, message aggregates) to the same count via
-    * [[IterativeRunner.loop]]'s `shuffleParts` — mismatched counts would
-    * re-exchange the cached side every superstep. */
+  /** The cache itself: the DISK_ONLY leaf, hash-repartitioned by `key` and
+    * persisted. The partition count is `parts` when given (a sibling cache's
+    * count, so two caches of one loop co-partition without a second sizing
+    * scan), else [[adaptiveParts]] of the leaf's row count, counted by one
+    * RDD job that also writes the (lazy) leaf — the one job the cache runs
+    * before it is first read. The persist is planned in `df`'s session, so
+    * under AQE its shuffle runs as one stage job when the loop's first plan
+    * is executed and its columnar batches are built by the first superstep.
+    * (A static cache planned with AQE off reports a SinglePartition at width
+    * 1, and every superstep over it then re-shuffled both join sides and
+    * the aggregate.) Returns (cached frame, partition count) so the caller
+    * can pin the loop's OTHER exchanges (state shuffles, message aggregates)
+    * to the same count via [[IterativeRunner.loop]]'s `shuffleParts` —
+    * mismatched counts would re-exchange the cached side every superstep. */
   def byKey(df: DataFrame, key: String, parts: Option[Int] = None): (DataFrame, Int) = {
-    val leaf = df.localCheckpoint(true, StorageLevel.DISK_ONLY)
-    val n = parts.getOrElse(adaptiveParts(leaf.sparkSession, leaf.count()))
+    val leaf = df.localCheckpoint(false, StorageLevel.DISK_ONLY)
+    val n = parts.getOrElse(adaptiveParts(df.sparkSession, SuperstepPlan.leafOf(leaf).get.rdd.count()))
     (leaf.repartition(n, col(key)).persist(), n)
   }
 }

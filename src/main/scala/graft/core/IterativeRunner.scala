@@ -3,7 +3,8 @@ package graft.core
 import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession, classic}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 
@@ -29,23 +30,28 @@ final case class IterMetrics(iter: Int, activeCount: Long, wallMs: Long,
   *
   * Plan once, rebind per superstep: the state is always a leaf (a
   * `LogicalRDD` over locally checkpointed rows), so consecutive supersteps
-  * usually build the same plan over a different leaf. The first is planned
-  * with its state leaf as a placeholder ([[SuperstepPlan]]); each later one
-  * still calls `step` (its analyzed plan is what shows the swap is safe) and,
-  * when that plan matches, runs the cached physical plan with the new
-  * state's rows swapped in — no optimization, physical planning or code
-  * compilation. A superstep whose plan differs (another join hint, a
-  * literal that changes per superstep such as a walk's step number, an
-  * in-step checkpoint leaf, a leaf of another schema, partitioning or size)
-  * is planned afresh and becomes the cached plan. Results are the same
-  * either way; `IterMetrics.rebound` records which path each superstep took.
+  * usually run the same plan over a different leaf. The first is planned
+  * with its state leaf as a placeholder ([[SuperstepPlan]]); a later one
+  * whose leaf looks the same to a plan (schema, size statistics,
+  * partitioning and ordering by column position) runs the cached physical
+  * plan with the new state's rows swapped in — the step is not even built,
+  * and nothing is analyzed, optimized, planned or compiled. Steps of
+  * [[loop]] are functions of the state alone, which is what makes the leaf
+  * enough to decide; a numbered step ([[loopNumbered]], the walks) may
+  * change its plan with the superstep number, so it is built every
+  * superstep and its analyzed plan must match as well. A superstep whose
+  * leaf or plan differs (another partitioning, an in-step checkpoint leaf,
+  * another join hint or step-number literal) is planned afresh and becomes
+  * the cached plan. Results are the same either way; `IterMetrics.rebound`
+  * records which path each superstep took.
   *
   * Lineage: each iteration's plan references the previous one; without
   * truncation the plan tree grows (exponentially for multi-reference steps)
   * and the driver dies around iteration ~10. A lazy local checkpoint per
   * iteration caps it. A durable `Checkpointer` (if given) additionally writes
-  * state + lineage + metrics tables every `truncateEvery` iterations so a
-  * killed run resumes mid-convergence.
+  * a state snapshot with its lineage every `truncateEvery` iterations, from
+  * the job that materializes that superstep, and a metrics line every
+  * iteration, so a killed run resumes mid-convergence.
   */
 object IterativeRunner {
 
@@ -83,6 +89,10 @@ object IterativeRunner {
     val child = GraftShim.cloneSession(spark)
     val conf = child.asInstanceOf[classic.SparkSession].sessionState.conf
     conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+    // whole-stage-codegen RDDs built through a partition evaluator skip the
+    // closure cleaning of `mapPartitionsWithIndex`, which a rebound
+    // superstep's `execute()` otherwise pays on every superstep
+    conf.setConf(SQLConf.USE_PARTITION_EVALUATOR, true)
     parts.foreach(conf.setConf(SQLConf.SHUFFLE_PARTITIONS, _))
     child
   }
@@ -93,9 +103,16 @@ object IterativeRunner {
     if (df.sparkSession eq session) df else GraftShim.ofRows(session, df.queryExecution.analyzed)
 
   /** Runs supersteps until `maxIter` or until `activeCount` is 0. Every
-    * superstep is planned in a [[loopSession]] of `init`'s session; the
-    * returned state is a frame of `init`'s session again, planned under its
-    * settings.
+    * superstep is planned and run in a [[loopSession]] of `init`'s session;
+    * the returned state is a frame of `init`'s session again, planned under
+    * its settings.
+    *
+    * The step is a function of the state alone, so a superstep whose state
+    * leaf has the cached plan's schema, size statistics, partitioning and
+    * ordering runs that plan without calling `step` at all; `step` is called
+    * only when no cached plan fits (normally supersteps 1 and 2). A step
+    * whose plan changes with the superstep number goes through
+    * [[loopNumbered]] instead.
     *
     * @param init         initial state; any schema, must contain the columns
     *                     `step` expects.
@@ -107,19 +124,22 @@ object IterativeRunner {
     *                     exchanges co-partition with it and the cached
     *                     exchange is reused every superstep. None keeps the
     *                     caller's setting.
-    * @param step         (state, iter) → next state. Must be a pure Dataset
-    *                     transformation. It may reference `state` any number
-    *                     of times: the loop truncates the plan to a leaf every
-    *                     iteration, so multiple references do NOT nest
-    *                     exponentially across supersteps (a k-reference step
-    *                     would otherwise grow the logical plan k^n deep and
-    *                     OOM the driver around iteration 10 — measured, not
-    *                     hypothetical).
+    * @param step         state → next state. Must be a pure Dataset
+    *                     transformation of its argument (no captured state
+    *                     that changes between supersteps). It may reference
+    *                     `state` any number of times: the loop truncates the
+    *                     plan to a leaf every iteration, so multiple
+    *                     references do NOT nest exponentially across
+    *                     supersteps (a k-reference step would otherwise grow
+    *                     the logical plan k^n deep and OOM the driver around
+    *                     iteration 10 — measured, not hypothetical).
     * @param activeCount  action deciding convergence: number of still-active
     *                     vertices in the NEW state; 0 stops the loop. A
     *                     constant runs exactly `maxIter` supersteps and no
     *                     job: the states' checkpoints materialize in the
-    *                     first job that reads the returned state.
+    *                     first job that reads the returned state. A
+    *                     [[CountTrue]] is one job per superstep, which on a
+    *                     durable save superstep also writes the snapshot.
     */
   def loop(
       init: DataFrame,
@@ -127,54 +147,92 @@ object IterativeRunner {
       truncateEvery: Int = 10,
       checkpointer: Option[Checkpointer] = None,
       shuffleParts: Option[Int] = None)(
+      step: DataFrame => DataFrame)(
+      activeCount: DataFrame => Long): Result =
+    run(init, maxIter, truncateEvery, checkpointer, shuffleParts, Left(step), activeCount)
+
+  /** [[loop]] for a step that also takes the superstep number (1-based).
+    * Every superstep builds its step; the cached plan runs only when the
+    * built step's analyzed plan is the cached one over the new leaf. */
+  def loopNumbered(
+      init: DataFrame,
+      maxIter: Int,
+      truncateEvery: Int = 10,
+      checkpointer: Option[Checkpointer] = None,
+      shuffleParts: Option[Int] = None)(
       step: (DataFrame, Int) => DataFrame)(
+      activeCount: DataFrame => Long): Result =
+    run(init, maxIter, truncateEvery, checkpointer, shuffleParts, Right(step), activeCount)
+
+  private def run(
+      init: DataFrame,
+      maxIter: Int,
+      truncateEvery: Int,
+      checkpointer: Option[Checkpointer],
+      shuffleParts: Option[Int],
+      step: Either[DataFrame => DataFrame, (DataFrame, Int) => DataFrame],
       activeCount: DataFrame => Long): Result = {
     val spark = init.sparkSession
     val session = loopSession(spark, shuffleParts)
-    val startIter = checkpointer.flatMap(_.latestIter).getOrElse(0)
-    val start = rebase(checkpointer.flatMap(_.restore()).getOrElse(init), session)
-    // the first leaf is made like every later one (lazy local checkpoint,
-    // no size statistics), so superstep 2 can rebind superstep 1's plan.
-    // LAZY: truncates the logical plan to a leaf immediately (so
-    // multi-reference steps can't nest exponentially) but defers
-    // materialization to the convergence action — one job per superstep,
-    // not two. Superseded leaves are dropped by the ContextCleaner once
-    // unreferenced.
-    var state = SuperstepPlan.checkpoint(start, start.queryExecution.executedPlan)
-    var iter = startIter
-    val metrics = Vector.newBuilder[IterMetrics]
-    var active = 1L
-    var cached: Option[SuperstepPlan] = None
-    while (iter < maxIter && active > 0) {
-      val t0 = System.nanoTime()
-      iter += 1
-      val stepDf = rebase(step(state, iter), session)
-      val leaf = SuperstepPlan.leafOf(state)
-      val reuse =
-        if (rebind.value) cached.filter(c => leaf.exists(c.fits(stepDf, _))) else None
-      val plan = reuse match {
-        case Some(c) => c.rebind(leaf.get)
-        case None =>
-          val p = stepDf.queryExecution.executedPlan
-          cached = leaf.flatMap(SuperstepPlan.cache(stepDf, _, p))
-          p
-      }
-      onPlan.value(plan)
-      val next = SuperstepPlan.checkpoint(stepDf, plan)
-      val planMs = (System.nanoTime() - t0) / 1000000L
-      // durable snapshot for kill/resume; the loop keeps the in-memory leaf,
-      // whose local checkpoint already bounds the lineage
-      if (iter % truncateEvery == 0) checkpointer.foreach(_.save(next, iter))
-      active = activeCount match {
-        case CountTrue(column) => SuperstepPlan.countTrue(next, stepDf, column)
-        case f => f(next)
-      }
-      val m = IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000L, planMs, reuse.isDefined)
-      metrics += m
-      onSuperstep.value(m)
-      checkpointer.foreach(_.appendMetrics(m))
-      state = next
+    def stepOf(state: LogicalRDD, iter: Int): DataFrame = {
+      val s = GraftShim.ofRows(session, state)
+      rebase(step.fold(_(s), _(s, iter)), session)
     }
-    Result(rebase(state, spark), iter, metrics.result())
+    // the session is active while the loop plans and runs, so plan copies
+    // made by rebinding carry its settings, not the caller's
+    val (last, iterations, metrics) = GraftShim.withActive(session) {
+      val startIter = checkpointer.flatMap(_.latestIter).getOrElse(0)
+      val start = rebase(checkpointer.flatMap(_.restore()).getOrElse(init), session)
+      // the first leaf is made like every later one (lazy local checkpoint,
+      // no size statistics), so superstep 2 can rebind superstep 1's plan.
+      // LAZY: truncates the logical plan to a leaf immediately (so
+      // multi-reference steps can't nest exponentially) but defers
+      // materialization to the convergence action — one job per superstep,
+      // not two. Superseded leaves are dropped by the ContextCleaner once
+      // unreferenced.
+      var state = SuperstepPlan.checkpoint(session, start.queryExecution.analyzed.output,
+        start.queryExecution.executedPlan)
+      var iter = startIter
+      val metrics = Vector.newBuilder[IterMetrics]
+      var active = 1L
+      var cached: Option[SuperstepPlan] = None
+      while (iter < maxIter && active > 0) {
+        val t0 = System.nanoTime()
+        iter += 1
+        val built = if (step.isRight) Some(stepOf(state, iter)) else None
+        val reuse = if (rebind.value) cached.filter(_.fits(state, built)) else None
+        val (plan, output, tracker) = reuse match {
+          case Some(c) => (c.rebind(state), c.output.map(_.newInstance()), new QueryPlanningTracker(None))
+          case None =>
+            val stepDf = built.getOrElse(stepOf(state, iter))
+            val p = stepDf.queryExecution.executedPlan
+            cached = SuperstepPlan.cache(stepDf, state, p)
+            (p, stepDf.queryExecution.analyzed.output, stepDf.queryExecution.tracker)
+        }
+        onPlan.value(plan)
+        val next = SuperstepPlan.checkpoint(session, output, plan)
+        val planMs = (System.nanoTime() - t0) / 1000000L
+        // durable snapshot for kill/resume, written by the job that
+        // materializes the leaf; the loop keeps the in-memory leaf, whose
+        // local checkpoint already bounds the lineage
+        val save = checkpointer.filter(_ => iter % truncateEvery == 0)
+        active = activeCount match {
+          case CountTrue(column) => save match {
+            case Some(cp) => cp.saveLeaf(session, next, iter, Some(column), tracker)
+            case None => SuperstepPlan.countTrue(session, next, column, tracker)
+          }
+          case f =>
+            save.foreach(_.saveLeaf(session, next, iter, None, tracker))
+            f(GraftShim.ofRows(session, next))
+        }
+        val m = IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000L, planMs, reuse.isDefined)
+        metrics += m
+        onSuperstep.value(m)
+        checkpointer.foreach(_.appendMetrics(m))
+        state = next
+      }
+      (state, iter, metrics.result())
+    }
+    Result(GraftShim.ofRows(spark, last), iterations, metrics)
   }
 }

@@ -2,9 +2,10 @@ package graft.core
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShim}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSeq, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, ResolvedHint}
@@ -17,34 +18,45 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
 
 /** A superstep's physical plan, planned once and re-executed over each new
   * state. The plan was built over a state leaf (a `LogicalRDD`, the
-  * placeholder); a later superstep whose step builds the same analyzed plan
-  * over a leaf of the same schema, partitioning and statistics runs the
+  * placeholder). A later superstep over a leaf of the same schema, size
+  * statistics, partitioning and ordering (by column position) runs the
   * cached plan with the new state's rows swapped into the placeholder's
-  * `RDDScanExec` — no optimization, planning or code compilation. Nodes
-  * above the swapped scan are copied (fresh exchanges and metrics); subtrees
-  * that do not read the state (the cached edge side) are shared.
+  * `RDDScanExec` — no step is built, and no optimization, planning or code
+  * compilation happens. For a numbered step, whose plan may change with the
+  * superstep number, the step is still built and its analyzed plan must
+  * match the cached one as well. Nodes above the swapped scan are copied
+  * (fresh exchanges and metrics); subtrees that do not read the state (the
+  * cached edge side) are shared.
   *
+  * @param output   the step's output columns, which every state leaf made
+  *   from this plan carries (with fresh ids).
   * @param sentinel stands in for the placeholder's rows in `plan` and
   *   `shape`, so the cache holds no superseded state. */
 private[core] final class SuperstepPlan private (
-    schema: StructType,
-    stats: (BigInt, Option[BigInt]),
+    key: SuperstepPlan.LeafKey,
     shape: (LogicalPlan, Seq[HintInfo]),
     plan: SparkPlan,
+    val output: Seq[Attribute],
     sentinel: RDD[InternalRow]) {
 
-  /** True when `step`, built over the state leaf `leaf`, is the cached
-    * superstep with only the state's rows changed. */
-  def fits(step: DataFrame, leaf: LogicalRDD): Boolean =
-    leaf.schema == schema && SuperstepPlan.statsOf(leaf) == stats &&
-      SuperstepPlan.shape(step, leaf.rdd, sentinel) == shape
+  /** True when a superstep over the state leaf `leaf` may run this plan:
+    * the leaf looks like the placeholder and, when the superstep's step was
+    * built (`step`, over `leaf`), the step is the cached one. */
+  def fits(leaf: LogicalRDD, step: Option[DataFrame]): Boolean =
+    SuperstepPlan.keyOf(leaf) == key &&
+      step.forall(SuperstepPlan.shape(_, leaf.rdd, sentinel) == shape)
 
-  /** The cached plan reading `leaf`'s rows. */
+  /** The cached plan reading `leaf`'s rows. Call it with the loop session
+    * active: the copied nodes take their settings from the active session. */
   def rebind(leaf: LogicalRDD): SparkPlan =
     plan.transformUp { case s: RDDScanExec if s.rdd eq sentinel => s.copy(rdd = leaf.rdd) }
 }
 
 private[core] object SuperstepPlan {
+
+  /** What a step's plan can see of a state leaf: its schema, size
+    * statistics, and partitioning and ordering by column position. */
+  type LeafKey = (StructType, (BigInt, Option[BigInt]), Partitioning, Seq[Expression])
 
   /** The state's leaf, when the frame is nothing but one. */
   def leafOf(state: DataFrame): Option[LogicalRDD] = state.queryExecution.analyzed match {
@@ -67,13 +79,22 @@ private[core] object SuperstepPlan {
     if (!scansState || readsDerived(plan, state, plain = true, mutable.Set.empty)) None
     else {
       val sentinel = state.sparkContext.emptyRDD[InternalRow]
-      Some(new SuperstepPlan(leaf.schema, statsOf(leaf), shape(step, state, sentinel),
+      Some(new SuperstepPlan(keyOf(leaf), shape(step, state, sentinel),
         plan.transformUp { case s: RDDScanExec if s.rdd eq state => s.copy(rdd = sentinel) },
-        sentinel))
+        step.queryExecution.analyzed.output, sentinel))
     }
   }
 
-  private def statsOf(leaf: LogicalRDD) = (leaf.stats.sizeInBytes, leaf.stats.rowCount)
+  private def keyOf(leaf: LogicalRDD): LeafKey = {
+    val in = new AttributeSeq(leaf.output)
+    (leaf.schema, (leaf.stats.sizeInBytes, leaf.stats.rowCount),
+      normalized(leaf.outputPartitioning, in), leaf.outputOrdering.map(QueryPlan.normalizeExpressions(_, in)))
+  }
+
+  private def normalized(p: Partitioning, in: AttributeSeq): Partitioning = p match {
+    case e: Expression => QueryPlan.normalizeExpressions(e, in).asInstanceOf[Partitioning]
+    case other => other
+  }
 
   /** `step`'s analyzed plan in canonical form, with the state's rows
     * replaced by `sentinel` and every RDD leaf's partitioning and ordering
@@ -86,14 +107,11 @@ private[core] object SuperstepPlan {
     val analyzed = step.queryExecution.analyzed
     val canonical = analyzed.transformUp {
       case l: LogicalRDD =>
+        val in = new AttributeSeq(l.output)
         l.copy(
           rdd = if (l.rdd eq state) sentinel else l.rdd,
-          outputPartitioning = l.outputPartitioning match {
-            case e: Expression => QueryPlan.normalizeExpressions(e, new AttributeSeq(l.output))
-              .asInstanceOf[Partitioning]
-            case p => p
-          },
-          outputOrdering = l.outputOrdering.map(QueryPlan.normalizeExpressions(_, new AttributeSeq(l.output))))(
+          outputPartitioning = normalized(l.outputPartitioning, in),
+          outputOrdering = l.outputOrdering.map(QueryPlan.normalizeExpressions(_, in)))(
           session, None, None)
     }.canonicalized
     (canonical, analyzed.collect { case h: ResolvedHint => h.hints })
@@ -111,17 +129,15 @@ private[core] object SuperstepPlan {
   private def dependsOn(rdd: RDD[_], target: RDD[_], seen: mutable.Set[Int]): Boolean =
     (rdd eq target) || (seen.add(rdd.id) && rdd.dependencies.exists(d => dependsOn(d.rdd, target, seen)))
 
-  /** Runs `plan` (`step`'s, or a rebound copy of it) as `step`'s output: its
-    * rows behind a lazy local checkpoint — materialized by the first job
-    * that reads them, lineage cut once it has — wrapped as a `LogicalRDD`
-    * leaf over `step`'s output columns, partitioned and ordered as `plan`
-    * delivers them. The leaf carries no size statistics, so later plans
-    * over it see the session's default size. */
-  def checkpoint(step: DataFrame, plan: SparkPlan): DataFrame = {
-    val session = step.sparkSession.asInstanceOf[classic.SparkSession]
+  /** Runs `plan` as a superstep whose output columns are `output`: its rows
+    * behind a lazy local checkpoint — materialized by the first job that
+    * reads them, lineage cut once it has — as a `LogicalRDD` leaf of
+    * `session`, partitioned and ordered as `plan` delivers them. The leaf
+    * carries no size statistics, so later plans over it see the session's
+    * default size. Call it with `session` active. */
+  def checkpoint(session: SparkSession, output: Seq[Attribute], plan: SparkPlan): LogicalRDD = {
     val rdd = plan.execute().map(_.copy())
     rdd.localCheckpoint()
-    val output = step.queryExecution.analyzed.output
     val rename = AttributeMap(plan.output.zip(output))
     def renamed[T <: Expression](e: T): Option[T] =
       if (e.references.forall(rename.contains))
@@ -133,8 +149,9 @@ private[core] object SuperstepPlan {
       case p => p
     }
     val ordering = plan.outputOrdering.map(renamed[SortOrder])
-    GraftShim.ofRows(session, LogicalRDD(output, rdd, partitioning,
-      if (ordering.forall(_.isDefined)) ordering.flatten else Nil, isStreaming = false)(session))
+    LogicalRDD(output, rdd, partitioning,
+      if (ordering.forall(_.isDefined)) ordering.flatten else Nil, isStreaming = false)(
+      session.asInstanceOf[classic.SparkSession])
   }
 
   /** A join's partitioning lists both sides' keys; the first (the streamed
@@ -146,34 +163,47 @@ private[core] object SuperstepPlan {
     case other => other
   }
 
-  /** Rows of the leaf frame `state` whose boolean column `column` is true,
-    * counted on its rows directly in one job — the convergence action,
-    * recorded as a SQL execution named "count" whose planning phases are
-    * `step`'s. */
-  def countTrue(state: DataFrame, step: DataFrame, column: String): Long = {
-    val session = state.sparkSession.asInstanceOf[classic.SparkSession]
-    val leaf = leafOf(state).getOrElse(
-      throw new IllegalArgumentException("countTrue needs a checkpointed state leaf"))
+  /** Index of the boolean column `column` of `leaf`. */
+  def booleanColumn(leaf: LogicalRDD, column: String): Int = {
     val i = leaf.output.indexWhere(_.name == column)
     require(i >= 0 && leaf.output(i).dataType == BooleanType,
       s"no boolean column '$column' in ${leaf.schema.simpleString}")
+    i
+  }
+
+  /** Runs `job` over the rows of `leaf` as a SQL execution named `name` that
+    * scans the leaf, with `tracker` as its planning record (the planned
+    * step's, or an empty one for a rebound superstep). */
+  def onLeaf[T](session: SparkSession, leaf: LogicalRDD, name: String,
+      tracker: QueryPlanningTracker)(job: RDD[InternalRow] => T): T = {
     val scan = RDDScanExec(leaf.output, leaf.rdd, "ExistingRDD", leaf.outputPartitioning,
       leaf.outputOrdering)
-    val qe = new QueryExecution(session, leaf, step.queryExecution.tracker) {
+    val qe = new QueryExecution(session.asInstanceOf[classic.SparkSession], leaf, tracker) {
       override def analyzed: LogicalPlan = leaf
       override def optimizedPlan: LogicalPlan = leaf
       override def sparkPlan: SparkPlan = scan
       override def executedPlan: SparkPlan = scan
     }
-    SQLExecution.withNewExecutionId(qe, Some("count")) {
-      session.sparkContext.runJob(leaf.rdd, (rows: Iterator[InternalRow]) => {
+    SQLExecution.withNewExecutionId(qe, Some(name))(job(leaf.rdd))
+  }
+
+  /** Rows of `leaf` whose boolean column `column` is true, counted on its
+    * rows directly in one job — the convergence action, recorded as a SQL
+    * execution named "count". */
+  def countTrue(session: SparkSession, leaf: LogicalRDD, column: String,
+      tracker: QueryPlanningTracker): Long = {
+    val i = booleanColumn(leaf, column)
+    onLeaf(session, leaf, "count", tracker) { rdd =>
+      // the (TaskContext, Iterator) overload: the one-argument one also
+      // cleans SparkContext's own wrapper closure on every call
+      session.sparkContext.runJob(rdd, (_: TaskContext, rows: Iterator[InternalRow]) => {
         var n = 0L
         while (rows.hasNext) {
           val r = rows.next()
           if (!r.isNullAt(i) && r.getBoolean(i)) n += 1
         }
         n
-      }).sum
+      }, 0 until rdd.partitions.length).sum
     }
   }
 }

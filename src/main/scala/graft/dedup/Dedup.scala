@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.algo.ConnectedComponents
-import graft.derive.LinkGraph
 import graft.text.TextStats
 
 /** Document deduplication operators for a large-scale training-data pipeline:
@@ -301,10 +300,12 @@ object Dedup {
     * clustering tail of [[clusters]], separated so the diameter guard is
     * testable on a planted pair graph. `pairs` (doc_a, doc_b) must name
     * only docs of `docs`, as [[minhashLsh]]`(docs)` does. The propagation
-    * is [[ConnectedComponents.minPropagation]] capped at `rounds`
-    * supersteps: min is exact, so its frontier supersteps give the labels
-    * of as many synchronous full rounds, and stopping early at the
-    * fixpoint changes nothing. Returns (assignment, unconverged):
+    * is the flood of [[ConnectedComponents.minPropagation]] capped at
+    * `rounds` + 1 supersteps: min is exact, so its frontier supersteps give
+    * the labels of as many synchronous full rounds, and stopping early at
+    * the fixpoint changes nothing; the extra superstep is the guard, and the
+    * labels returned are those of round `rounds`. Returns (assignment,
+    * unconverged):
     * `unconverged` is the number of docs whose canonical id would STILL
     * change given one more round — 0 iff `rounds` covered every component's
     * diameter. Non-zero means the clustering is NOT transitively closed
@@ -318,21 +319,20 @@ object Dedup {
       rounds: Int = 8,
       escalate: Boolean = false): (DataFrame, Long) = {
     val pairEdges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    def propagate(maxIter: Int): DataFrame = ConnectedComponents.minPropagation(
-      pairEdges, docs.select(col("doc_id").as("vid")), maxIter)
-    val labels = propagate(rounds)
-    // the guard count: docs whose canonical would still drop given one more
-    // round — one cheap action over the (tiny) pair graph
-    val unconverged = LinkGraph.symmetrize(pairEdges)
-      .join(labels.select(col("vid").as("src"), col("component").as("c")), "src")
-      .groupBy(col("dst").as("vid")).agg(min(col("c")).as("mc"))
-      .join(labels, "vid")
-      .where(col("mc") < col("component")).count()
+    val vids = docs.select(col("doc_id").as("vid"))
+    // one superstep past `rounds` gives the guard: it lowers exactly the docs
+    // whose canonical would still drop, and their count is its active count;
+    // the labels of round `rounds` are the ones it carries as `previous`
+    // (the cap saturates at Int.MaxValue, where the flood runs to its fixpoint)
+    val res = ConnectedComponents.minFlood(pairEdges, vids, math.max(rounds, rounds + 1),
+      keepPrevious = true)
+    val unconverged = if (res.iterations > rounds) res.metrics.last.activeCount else 0L
+    val labels = res.state.select(col("vid"), col("previous").as("component"))
     val out = if (unconverged > 0) {
       System.err.println(s"[dedup.clusters] WARNING: $unconverged docs unconverged " +
         s"after $rounds rounds (pair-graph component diameter exceeds rounds); " +
         (if (escalate) "escalating to fixpoint" else "canonical ids are SPLIT"))
-      if (escalate) propagate(Int.MaxValue) else labels
+      if (escalate) ConnectedComponents.minPropagation(pairEdges, vids, Int.MaxValue) else labels
     } else labels
     (out.select(col("vid").as("doc_id"), col("component").as("canonical_id")), unconverged)
   }

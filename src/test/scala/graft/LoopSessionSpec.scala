@@ -119,6 +119,41 @@ class LoopSessionSpec extends SparkTestBase {
     assert(spark.conf.get(Aqe) == "true")
   }
 
+  test("a rebound superstep's plan carries the loop session's settings") {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val steps = mutable.ArrayBuffer.empty[graft.core.IterMetrics]
+    IterativeRunner.onSuperstep.withValue(steps += _) {
+      IterativeRunner.onPlan.withValue(plans += _) {
+        PageRank.run(edges, tol = 0.0, maxIter = 4).ranks.count()
+      }
+    }
+    assert(steps.map(_.rebound) == Seq(false, true, true, true), steps)
+    val loop = plans.head.session
+    assert(loop ne spark)
+    for ((plan, m) <- plans.zip(steps); node <- plan.collect { case p => p }) {
+      assert(node.session eq loop, s"superstep ${m.iter}: ${node.nodeName}")
+      assert(!node.conf.adaptiveExecutionEnabled && node.conf.usePartitionEvaluator,
+        s"superstep ${m.iter}: ${node.nodeName}")
+    }
+    assert(spark.conf.get(Aqe) == "true")
+  }
+
+  test("byKey runs one job before the first superstep: same rows, hash-partitioned by key") {
+    val n = 30000L
+    val ring = spark.range(n).select(col("id").as("src"), ((col("id") + 1L) % n).as("dst"))
+      .localCheckpoint()
+    val sym = ring.union(ring.select(col("dst").as("src"), col("src").as("dst")))
+    val ((cached, parts), jobs) = jobsOf(IterCache.byKey(sym, "src"))
+    try {
+      assert(jobs == 1, jobs)
+      assert(parts == IterCache.adaptiveParts(spark, 2L * n) && parts > 1, parts)
+      assert(cached.sparkSession eq spark)
+      assert(bits(cached) == bits(sym))
+      assert(cached.rdd.getNumPartitions == parts)
+      assert(cached.where(spark_partition_id() =!= pmod(hash(col("src")), lit(parts))).isEmpty)
+    } finally cached.unpersist(false)
+  }
+
   test("widenIfNarrow refuses a grouped input and accepts a leaf or a scan pipeline") {
     val rows = (1L to 40L).map(i => (i % 5, i)).toDF("k", "v")
     val grouped = rows.groupBy("k").agg(sum("v").as("v"))

@@ -83,7 +83,7 @@ class RebindSpec extends SparkTestBase {
     // partitioning stay, only the analyzed plan changes
     val init = (1L to 20L).map(v => (v, v.toDouble)).toDF("vid", "value")
     val side = (1L to 20L).map(v => (v, (v % 3).toDouble)).toDF("vid", "w")
-    def run(hintFrom: Int) = IterativeRunner.loop(init, maxIter = 5) { (state, iter) =>
+    def run(hintFrom: Int) = IterativeRunner.loopNumbered(init, maxIter = 5) { (state, iter) =>
       state.join(if (iter >= hintFrom) broadcast(side) else side, "vid")
         .select(col("vid"), (col("value") * 0.5 + col("w")).as("value"))
     }(_ => 1L).state
@@ -98,6 +98,29 @@ class RebindSpec extends SparkTestBase {
     assert(unchanged.drop(1).forall(_.rebound), unchanged)
   }
 
+  test("an iteration-free loop builds its step once per leaf shape") {
+    // superstep 1's leaf is the round-robin init, every later one is
+    // hash-partitioned by the step: the step is built for supersteps 1 and 2
+    // only, and the leaf of another partitioning (superstep 2's) is planned
+    val init = (1L to 20L).map(v => (v, v.toDouble)).toDF("vid", "value").repartition(3)
+    val side = (1L to 20L).map(v => (v, (v % 3).toDouble)).toDF("vid", "w")
+    def run(): (Seq[Seq[Any]], Int) = {
+      var built = 0
+      val out = IterativeRunner.loop(init, maxIter = 6) { state =>
+        built += 1
+        state.repartition(2, col("vid")).join(side, "vid")
+          .select(col("vid"), (col("value") * 0.5 + col("w")).as("value"))
+      }(_ => 1L).state
+      (bits(out), built)
+    }
+    val ((planned, plannedBuilds), _) = arm(rebind = false)(run())
+    val ((rebound, reboundBuilds), steps) = arm(rebind = true)(run())
+    assert(rebound == planned)
+    assert(plannedBuilds == 6)
+    assert(reboundBuilds == 2)
+    assert(steps.map(_.rebound) == Seq(false, false, true, true, true, true), steps)
+  }
+
   private lazy val chainPairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
 
   /** Loops that drive the runner through an operator: name, the number of
@@ -106,7 +129,8 @@ class RebindSpec extends SparkTestBase {
     * the run. */
   private val runnerLoops: Seq[(String, Option[Int], Option[Int], () => DataFrame)] = Seq(
     ("ConnectedComponents.run", None, Some(3), () => ConnectedComponents.run(edges, vertices)),
-    ("Dedup.propagateCanonical", Some(8), Some(3),
+    // rounds = 8 plus the guard superstep
+    ("Dedup.propagateCanonical", Some(9), Some(3),
       () => Dedup.propagateCanonical(chainPairs, (0L until 12L).toDF("doc_id"), rounds = 8)._1),
     ("RandomWalks.deepWalk", Some(5), None, () => RandomWalks.deepWalk(edges, pathLength = 6)),
     ("RandomWalks.node2vec", Some(4), None, () => RandomWalks.node2vec(edges, pathLength = 6)),
@@ -133,7 +157,8 @@ class RebindSpec extends SparkTestBase {
     val root = Files.createTempDirectory("graft-rebind").toString
     val init = (1L to 20L).map(v => (v, v.toDouble, true)).toDF("vid", "value", "active")
     val states = mutable.Map.empty[Int, DataFrame]
-    val res = IterativeRunner.loop(init, maxIter = 4, truncateEvery = 2,
+    // numbered, so the step sees (and records) every superstep's state
+    val res = IterativeRunner.loopNumbered(init, maxIter = 4, truncateEvery = 2,
       checkpointer = Some(new Checkpointer(spark, root, "r"))) { (state, iter) =>
       states(iter) = state
       state.select($"vid", ($"value" - 1.0).as("value"), ($"value" > 1.0).as("active"))
@@ -144,7 +169,7 @@ class RebindSpec extends SparkTestBase {
     assert(res.metrics.map(_.activeCount) == Seq(19L, 18L, 17L, 16L))
     // the snapshot and its lineage are still written, with the recorded schema
     assert(Files.exists(Paths.get(s"$root/r/state/iter=000002/_COMMITTED")))
-    assert(spark.read.parquet(s"$root/r/lineage/iter=000002").agg(sum("rows")).head().getLong(0) == 20L)
+    assert(spark.read.json(s"$root/r/lineage/iter=000002.jsonl").agg(sum("rows")).head().getLong(0) == 20L)
     // metrics.jsonl carries plan_ms and rebound next to the original keys
     val lines = Files.readAllLines(Paths.get(s"$root/r/metrics.jsonl"))
     assert(lines.size == 4)
