@@ -25,7 +25,10 @@ import graft.derive.LinkGraph
   *
   * Sampling is deterministic: the step draw is a hash of (walk id, step,
   * seed), so walks are reproducible across runs and partitionings (the
-  * reference's global `new Random()`, `package.scala:11`, is not).
+  * reference's global `new Random()`, `package.scala:11`, is not). The walk
+  * state carries its step number as the column `step`, so a superstep is a
+  * function of the state alone and the runner reruns one cached plan for
+  * every step; the column never leaves the operator.
   */
 object RandomWalks {
 
@@ -52,9 +55,9 @@ object RandomWalks {
     * integer arithmetic (squared mixing like Similarity.planeComponent), so
     * the DuckDB oracle replays the exact same walks — q_deepwalk is a full
     * hash-match check, not rows-only. Mirrors [[graft.Oracles.mixSql]]. */
-  private[graft] def mix(walkId: Column, step: Int, salt: Long): Column = {
-    val c = step.toLong * 40503L + salt * 97L + 7L
-    val t = pmod(pmod(walkId, lit(1000003L)) * lit(2654435761L) + lit(c), lit(1000003L))
+  private[graft] def mix(walkId: Column, step: Column, salt: Long): Column = {
+    val c = step.cast("long") * lit(40503L) + lit(salt * 97L + 7L)
+    val t = pmod(pmod(walkId, lit(1000003L)) * lit(2654435761L) + c, lit(1000003L))
     pmod(t * t * lit(31L) + t * lit(7L) + pmod(walkId, lit(2000003L)), lit(2000003L))
   }
 
@@ -66,10 +69,10 @@ object RandomWalks {
     * bias ≤ deg/4·10¹² (≈2.5e-4 at deg=10⁹). Mirrors
     * [[graft.Oracles.wideMixSql]] exactly (the salt offset 777777 is part of
     * the portable contract). */
-  private[graft] def wideMix(walkId: Column, step: Int, salt: Long): Column =
+  private[graft] def wideMix(walkId: Column, step: Column, salt: Long): Column =
     mix(walkId, step, salt) * lit(2000003L) + mix(walkId, step, salt + 777777L)
 
-  private[graft] def draw(walkId: Column, step: Int, deg: Column, seed: Long, salt: Long = 0L): Column =
+  private[graft] def draw(walkId: Column, step: Column, deg: Column, seed: Long, salt: Long = 0L): Column =
     pmod(wideMix(walkId, step, seed + salt), deg).cast("int")
 
   /** DeepWalk: `walksPerVertex` uniform walks of length `pathLength` from
@@ -83,19 +86,18 @@ object RandomWalks {
       seed: Long = 42L): DataFrame = {
     val cached = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
     // start degrees are derived FROM the cached index (identical rows: count
-    // of sym edges per src) instead of re-deriving the upstream edge table
-    // a second time (round 6)
+    // of sym edges per src), not from the upstream edge table again
     val starts = cached.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
       .crossJoin(edges.sparkSession.range(walksPerVertex).select(col("id").as("rep")))
       .select(
         (col("vid") * walksPerVertex + col("rep")).as("walk_id"),
         col("vid").as("cur"), col("deg").as("cur_deg"),
-        array(col("vid")).as("path"))
-    val walks = IterativeRunner.loopNumbered(starts, pathLength - 1, shuffleParts = walkParts(cached)) { (w, step) =>
-      val pick = draw(col("walk_id"), step, col("cur_deg"), seed)
+        array(col("vid")).as("path"), lit(1).as("step"))
+    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = walkParts(cached)) { w =>
+      val pick = draw(col("walk_id"), col("step"), col("cur_deg"), seed)
       w.join(cached, w("cur") === cached("src") && pick === cached("idx"))
         .select(col("walk_id"), col("dst").as("cur"), col("dst_deg").as("cur_deg"),
-          concat(col("path"), array(col("dst"))).as("path"))
+          concat(col("path"), array(col("dst"))).as("path"), (col("step") + 1).as("step"))
     }(_ => 1L).state
     walks.count() // materialize the lazy checkpoint chain while the index is cached
     cached.unpersist(false)
@@ -124,9 +126,9 @@ object RandomWalks {
       seed: Long = 42L): DataFrame = {
     val top = math.max(1.0, math.max(1.0 / p, 1.0 / q))
     val cached = neighborIndex(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // round 6: the membership set and the start degrees are PROJECTIONS of
-    // the cached index (same symmetrized rows) — the old code re-derived the
-    // upstream edge table twice more and paid a second cache build
+    // the membership set and the start degrees are PROJECTIONS of the
+    // cached index (same symmetrized rows), so the upstream edge table is
+    // derived and cached once
     val nbrSet = cached
       .select(col("src").as("m_src"), col("dst").as("m_dst"), lit(true).as("in_nbr"))
     // step 1: uniform first hop (the loop's initial state)
@@ -136,23 +138,24 @@ object RandomWalks {
         col("vid").as("cur"), col("deg").as("cur_deg"), array(col("vid")).as("path"))
     val firstHop = starts
       .join(cached, col("cur") === cached("src") &&
-        draw(col("walk_id"), 1, col("cur_deg"), seed) === cached("idx"))
+        draw(col("walk_id"), lit(1), col("cur_deg"), seed) === cached("idx"))
       .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"),
-        col("dst_deg").as("cur_deg"), concat(col("path"), array(col("dst"))).as("path"))
-    val walks = IterativeRunner.loopNumbered(firstHop, pathLength - 2, shuffleParts = walkParts(cached)) { (w, iter) =>
-      val step = iter + 1
+        col("dst_deg").as("cur_deg"), concat(col("path"), array(col("dst"))).as("path"),
+        lit(2).as("step"))
+    val walks = IterativeRunner.loop(firstHop, pathLength - 2, shuffleParts = walkParts(cached)) { w =>
+      val step = col("step")
       // one row per bounded rejection attempt; all attempts resolve in a
       // single index join + membership join, then collapse to the first
       // accepted candidate (the last attempt is force-accepted)
       val cands = w
-        .select(col("walk_id"), col("prev"), col("cur"), col("cur_deg"), col("path"),
+        .select(col("walk_id"), col("prev"), col("cur"), col("cur_deg"), col("path"), step,
           explode(sequence(lit(0), lit(attempts - 1))).as("t"))
         .withColumn("pick", element_at(
           array((0 until attempts)
             .map(a => draw(col("walk_id"), step, col("cur_deg"), seed, a * 1009L)): _*),
           col("t") + 1))
         .join(cached, col("cur") === cached("src") && col("pick") === cached("idx"))
-        .select(col("walk_id"), col("prev"), col("cur"), col("path"), col("t"),
+        .select(col("walk_id"), col("prev"), col("cur"), col("path"), step, col("t"),
           col("dst").as("cand"), col("dst_deg").as("cand_deg"))
         .join(nbrSet, col("prev") === col("m_src") && col("cand") === col("m_dst"), "left")
       val u = element_at(
@@ -166,12 +169,12 @@ object RandomWalks {
       cands
         .select(col("walk_id"),
           struct(when(accepted, col("t")).otherwise(lit(Int.MaxValue)).as("prio"),
-            col("cur"), col("cand"), col("cand_deg"), col("path")).as("s"))
+            col("cur"), col("cand"), col("cand_deg"), col("path"), step).as("s"))
         .groupBy("walk_id")
         .agg(min(col("s")).as("s"))
         .select(col("walk_id"), col("s.cur").as("prev"), col("s.cand").as("cur"),
           col("s.cand_deg").as("cur_deg"),
-          concat(col("s.path"), array(col("s.cand"))).as("path"))
+          concat(col("s.path"), array(col("s.cand"))).as("path"), (col("s.step") + 1).as("step"))
     }(_ => 1L).state
     walks.count() // materialize the lazy checkpoint chain while caches live
     cached.unpersist(false)
@@ -181,9 +184,9 @@ object RandomWalks {
   /** MetaPath2Vec: type-constrained walk (`MetaPath2Vec.scala:151-171`): at
     * step s only neighbors whose kind equals metaPath(s % len) are eligible;
     * walks with no eligible neighbor stop (path keeps its length so far).
-    * Positional index is per (src, kind); the per-step eligible degree is a
-    * kind-filtered join (kinds are few, the index is partition-pruned by the
-    * kind filter before the join). */
+    * Positional index is per (src, kind); a step computes its wanted kind
+    * from the state's `step` column and joins the per-(src, kind) degrees
+    * and the index on it. */
   def metaPath2Vec(
       edges: DataFrame,
       vertices: DataFrame,
@@ -197,33 +200,33 @@ object RandomWalks {
         row_number().over(Window.partitionBy("src", "kind").orderBy("dst")) - 1)
       .select(col("src"), col("kind"), col("idx"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // round 6: the per-(src, kind) degrees come from the cached index
-    // (identical rows) instead of a second symK pass + second cache; sized
-    // first, so the sizing count fills the cache degK reads
+    // the per-(src, kind) degrees come from the cached index (identical
+    // rows), not from a second symK pass; sized first, so the sizing count
+    // fills the cache degK reads
     val parts = walkParts(cached)
     // leaf: every walk step probes degK — without it the per-(src, kind)
     // aggregate over the FULL cached index would re-run once per step
-    // (round-6 review finding; the leaf materializes it once)
-    val degK = cached.groupBy("src", "kind").agg(count(lit(1)).as("deg"))
+    val degK = cached.groupBy(col("src").as("d_src"), col("kind").as("d_kind"))
+      .agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
+    val index = cached.select(col("src").as("i_src"), col("kind").as("i_kind"), col("idx"), col("dst"))
     val starts = vertices.where(col("kind") === metaPath.head)
       .select(col("vid").as("walk_id"), col("vid").as("cur"), array(col("vid")).as("path"),
-        lit(false).as("stopped"))
-    val walks = IterativeRunner.loopNumbered(starts, pathLength - 1, shuffleParts = parts) { (w, step) =>
-      val wantKind = metaPath(step % metaPath.length)
-      val dK = degK.where(col("kind") === wantKind).select(col("src").as("d_src"), col("deg"))
-      val iK = cached.where(col("kind") === wantKind)
-        .select(col("src").as("i_src"), col("idx"), col("dst"))
-      val withDeg = w.join(dK, w("cur") === col("d_src"), "left")
-      val pick = draw(col("walk_id"), step, col("deg"), seed)
+        lit(false).as("stopped"), lit(1).as("step"))
+    val walks = IterativeRunner.loop(starts, pathLength - 1, shuffleParts = parts) { w =>
+      val withDeg = w
+        .withColumn("want", element_at(typedLit(metaPath), pmod(col("step"), lit(metaPath.length)) + 1))
+        .join(degK, col("cur") === col("d_src") && col("want") === col("d_kind"), "left")
+      val pick = draw(col("walk_id"), col("step"), col("deg"), seed)
       withDeg
-        .join(iK, col("cur") === col("i_src") && pick === col("idx"), "left")
+        .join(index, col("cur") === col("i_src") && col("want") === col("i_kind") && pick === col("idx"),
+          "left")
         .select(
           col("walk_id"),
           when(col("stopped") || col("deg").isNull, col("cur")).otherwise(col("dst")).as("cur"),
           when(col("stopped") || col("deg").isNull, col("path"))
             .otherwise(concat(col("path"), array(col("dst")))).as("path"),
-          (col("stopped") || col("deg").isNull).as("stopped"))
+          (col("stopped") || col("deg").isNull).as("stopped"), (col("step") + 1).as("step"))
     }(_ => 1L).state
     walks.count() // materialize the lazy checkpoint chain while caches live
     cached.unpersist(false)

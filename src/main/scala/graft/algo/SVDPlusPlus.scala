@@ -113,13 +113,14 @@ object SVDPlusPlus {
     // iteration under the blanket shuffle_hash hint, while the vertex state
     // is rating-vertex-sized. Pick broadcast when the MEASURED state SIZE
     // is broadcast-safe, else keep shuffle_hash (never sort the edge side).
-    // The cutover is in BYTES, not rows: a state row carries two or three
-    // rank-length double arrays (~16·rank+64 B), so a row-count cutover à
-    // la the (vid, key)-shaped dict joins would admit multi-hundred-MB
-    // broadcasts rebuilt per join per iteration. 64 MB keeps the build
-    // cheap at every rank. v is a leaf; the count doubles as its
-    // materializing action. With broadcast the edge cache is probed in
-    // place — zero edge shuffles per SGD iteration.
+    // The cutover is in BYTES, not rows: every hinted side projects at most
+    // two rank-length double arrays (users → pu, p2; v → qi, yi), one row
+    // per vertex, so ~16·rank+64 B per row sizes the widest side. A
+    // row-count cutover à la the (vid, key)-shaped dict joins would admit
+    // multi-hundred-MB broadcasts rebuilt per join per iteration. 64 MB
+    // keeps the build cheap at every rank. v is a leaf; the count doubles
+    // as its materializing action. With broadcast the edge cache is probed
+    // in place — zero edge shuffles per SGD iteration.
     val stateBytesEst = v.count() * (16L * conf.rank + 64L)
     val stateHint = if (stateBytesEst <= (64L << 20)) "broadcast" else "shuffle_hash"
 

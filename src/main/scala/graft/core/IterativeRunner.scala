@@ -4,7 +4,7 @@ import scala.util.DynamicVariable
 
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession, classic}
 import org.apache.spark.sql.catalyst.QueryPlanningTracker
-import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 
@@ -35,15 +35,14 @@ final case class IterMetrics(iter: Int, activeCount: Long, wallMs: Long,
   * whose leaf looks the same to a plan (schema, size statistics,
   * partitioning and ordering by column position) runs the cached physical
   * plan with the new state's rows swapped in — the step is not even built,
-  * and nothing is analyzed, optimized, planned or compiled. Steps of
-  * [[loop]] are functions of the state alone, which is what makes the leaf
-  * enough to decide; a numbered step ([[loopNumbered]], the walks) may
-  * change its plan with the superstep number, so it is built every
-  * superstep and its analyzed plan must match as well. A superstep whose
-  * leaf or plan differs (another partitioning, an in-step checkpoint leaf,
-  * another join hint or step-number literal) is planned afresh and becomes
-  * the cached plan. Results are the same either way; `IterMetrics.rebound`
-  * records which path each superstep took.
+  * and nothing is analyzed, optimized, planned or compiled. A step is a
+  * function of the state alone, which is what makes the leaf enough to
+  * decide; a step that needs the superstep number carries it as a state
+  * column (the walks' `step`). A superstep whose leaf differs (another
+  * partitioning or size statistics), or whose plan cannot be cached (an
+  * in-step checkpoint leaf), is planned afresh and becomes the cached plan.
+  * Results are the same either way; `IterMetrics.rebound` records which
+  * path each superstep took.
   *
   * Lineage: each iteration's plan references the previous one; without
   * truncation the plan tree grows (exponentially for multi-reference steps)
@@ -111,8 +110,7 @@ object IterativeRunner {
     * leaf has the cached plan's schema, size statistics, partitioning and
     * ordering runs that plan without calling `step` at all; `step` is called
     * only when no cached plan fits (normally supersteps 1 and 2). A step
-    * whose plan changes with the superstep number goes through
-    * [[loopNumbered]] instead.
+    * that needs the superstep number carries it as a state column.
     *
     * @param init         initial state; any schema, must contain the columns
     *                     `step` expects.
@@ -125,8 +123,9 @@ object IterativeRunner {
     *                     exchange is reused every superstep. None keeps the
     *                     caller's setting.
     * @param step         state → next state. Must be a pure Dataset
-    *                     transformation of its argument (no captured state
-    *                     that changes between supersteps). It may reference
+    *                     transformation of its argument: no captured value
+    *                     that changes between supersteps (the superstep
+    *                     number, say, is a state column). It may reference
     *                     `state` any number of times: the loop truncates the
     *                     plan to a leaf every iteration, so multiple
     *                     references do NOT nest exponentially across
@@ -148,36 +147,9 @@ object IterativeRunner {
       checkpointer: Option[Checkpointer] = None,
       shuffleParts: Option[Int] = None)(
       step: DataFrame => DataFrame)(
-      activeCount: DataFrame => Long): Result =
-    run(init, maxIter, truncateEvery, checkpointer, shuffleParts, Left(step), activeCount)
-
-  /** [[loop]] for a step that also takes the superstep number (1-based).
-    * Every superstep builds its step; the cached plan runs only when the
-    * built step's analyzed plan is the cached one over the new leaf. */
-  def loopNumbered(
-      init: DataFrame,
-      maxIter: Int,
-      truncateEvery: Int = 10,
-      checkpointer: Option[Checkpointer] = None,
-      shuffleParts: Option[Int] = None)(
-      step: (DataFrame, Int) => DataFrame)(
-      activeCount: DataFrame => Long): Result =
-    run(init, maxIter, truncateEvery, checkpointer, shuffleParts, Right(step), activeCount)
-
-  private def run(
-      init: DataFrame,
-      maxIter: Int,
-      truncateEvery: Int,
-      checkpointer: Option[Checkpointer],
-      shuffleParts: Option[Int],
-      step: Either[DataFrame => DataFrame, (DataFrame, Int) => DataFrame],
       activeCount: DataFrame => Long): Result = {
     val spark = init.sparkSession
     val session = loopSession(spark, shuffleParts)
-    def stepOf(state: LogicalRDD, iter: Int): DataFrame = {
-      val s = GraftShim.ofRows(session, state)
-      rebase(step.fold(_(s), _(s, iter)), session)
-    }
     // the session is active while the loop plans and runs, so plan copies
     // made by rebinding carry its settings, not the caller's
     val (last, iterations, metrics) = GraftShim.withActive(session) {
@@ -199,12 +171,11 @@ object IterativeRunner {
       while (iter < maxIter && active > 0) {
         val t0 = System.nanoTime()
         iter += 1
-        val built = if (step.isRight) Some(stepOf(state, iter)) else None
-        val reuse = if (rebind.value) cached.filter(_.fits(state, built)) else None
+        val reuse = if (rebind.value) cached.filter(_.fits(state)) else None
         val (plan, output, tracker) = reuse match {
           case Some(c) => (c.rebind(state), c.output.map(_.newInstance()), new QueryPlanningTracker(None))
           case None =>
-            val stepDf = built.getOrElse(stepOf(state, iter))
+            val stepDf = rebase(step(GraftShim.ofRows(session, state)), session)
             val p = stepDf.queryExecution.executedPlan
             cached = SuperstepPlan.cache(stepDf, state, p)
             (p, stepDf.queryExecution.analyzed.output, stepDf.queryExecution.tracker)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSeq, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, LogicalPlan, ResolvedHint}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec, SQLExecution, SparkPlan}
@@ -22,29 +22,24 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   * statistics, partitioning and ordering (by column position) runs the
   * cached plan with the new state's rows swapped into the placeholder's
   * `RDDScanExec` — no step is built, and no optimization, planning or code
-  * compilation happens. For a numbered step, whose plan may change with the
-  * superstep number, the step is still built and its analyzed plan must
-  * match the cached one as well. Nodes above the swapped scan are copied
+  * compilation happens. The leaf is enough to decide because a step is a
+  * function of the state alone. Nodes above the swapped scan are copied
   * (fresh exchanges and metrics); subtrees that do not read the state (the
   * cached edge side) are shared.
   *
   * @param output   the step's output columns, which every state leaf made
   *   from this plan carries (with fresh ids).
-  * @param sentinel stands in for the placeholder's rows in `plan` and
-  *   `shape`, so the cache holds no superseded state. */
+  * @param sentinel stands in for the placeholder's rows in `plan`, so the
+  *   cache holds no superseded state. */
 private[core] final class SuperstepPlan private (
     key: SuperstepPlan.LeafKey,
-    shape: (LogicalPlan, Seq[HintInfo]),
     plan: SparkPlan,
     val output: Seq[Attribute],
     sentinel: RDD[InternalRow]) {
 
-  /** True when a superstep over the state leaf `leaf` may run this plan:
-    * the leaf looks like the placeholder and, when the superstep's step was
-    * built (`step`, over `leaf`), the step is the cached one. */
-  def fits(leaf: LogicalRDD, step: Option[DataFrame]): Boolean =
-    SuperstepPlan.keyOf(leaf) == key &&
-      step.forall(SuperstepPlan.shape(_, leaf.rdd, sentinel) == shape)
+  /** True when a superstep over the state leaf `leaf` may run this plan: the
+    * leaf looks like the placeholder. */
+  def fits(leaf: LogicalRDD): Boolean = SuperstepPlan.keyOf(leaf) == key
 
   /** The cached plan reading `leaf`'s rows. Call it with the loop session
     * active: the copied nodes take their settings from the active session. */
@@ -79,7 +74,7 @@ private[core] object SuperstepPlan {
     if (!scansState || readsDerived(plan, state, plain = true, mutable.Set.empty)) None
     else {
       val sentinel = state.sparkContext.emptyRDD[InternalRow]
-      Some(new SuperstepPlan(keyOf(leaf), shape(step, state, sentinel),
+      Some(new SuperstepPlan(keyOf(leaf),
         plan.transformUp { case s: RDDScanExec if s.rdd eq state => s.copy(rdd = sentinel) },
         step.queryExecution.analyzed.output, sentinel))
     }
@@ -94,27 +89,6 @@ private[core] object SuperstepPlan {
   private def normalized(p: Partitioning, in: AttributeSeq): Partitioning = p match {
     case e: Expression => QueryPlan.normalizeExpressions(e, in).asInstanceOf[Partitioning]
     case other => other
-  }
-
-  /** `step`'s analyzed plan in canonical form, with the state's rows
-    * replaced by `sentinel` and every RDD leaf's partitioning and ordering
-    * written by column position (a leaf's own attribute ids are fresh in
-    * every superstep), and its join hints, which the canonical form drops
-    * but which choose the physical join. */
-  private def shape(step: DataFrame, state: RDD[InternalRow],
-      sentinel: RDD[InternalRow]): (LogicalPlan, Seq[HintInfo]) = {
-    val session = step.sparkSession.asInstanceOf[classic.SparkSession]
-    val analyzed = step.queryExecution.analyzed
-    val canonical = analyzed.transformUp {
-      case l: LogicalRDD =>
-        val in = new AttributeSeq(l.output)
-        l.copy(
-          rdd = if (l.rdd eq state) sentinel else l.rdd,
-          outputPartitioning = normalized(l.outputPartitioning, in),
-          outputOrdering = l.outputOrdering.map(QueryPlan.normalizeExpressions(_, in)))(
-          session, None, None)
-    }.canonicalized
-    (canonical, analyzed.collect { case h: ResolvedHint => h.hints })
   }
 
   private def readsDerived(plan: SparkPlan, state: RDD[_], plain: Boolean,

@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
 import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, RandomWalks, ShortestPaths}
@@ -15,8 +15,8 @@ import graft.dedup.Dedup
 
 /** Plan once, rebind per superstep: every loop gives bit-identical results
   * whether supersteps rebind the cached plan or are planned afresh, and the
-  * supersteps that cannot rebind (an in-step checkpoint leaf, a changed
-  * plan) fall back to planning. */
+  * supersteps that cannot rebind (an in-step checkpoint leaf, a leaf of
+  * another shape) fall back to planning. */
 class RebindSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -77,27 +77,6 @@ class RebindSpec extends SparkTestBase {
     assert(steps.length == 6 && steps.forall(!_.rebound), steps)
   }
 
-  test("a superstep whose plan changes is planned afresh, then rebound") {
-    // the step gains a broadcast hint from superstep `hintFrom` on: the
-    // physical plan (a broadcast join either way) and the state's
-    // partitioning stay, only the analyzed plan changes
-    val init = (1L to 20L).map(v => (v, v.toDouble)).toDF("vid", "value")
-    val side = (1L to 20L).map(v => (v, (v % 3).toDouble)).toDF("vid", "w")
-    def run(hintFrom: Int) = IterativeRunner.loopNumbered(init, maxIter = 5) { (state, iter) =>
-      state.join(if (iter >= hintFrom) broadcast(side) else side, "vid")
-        .select(col("vid"), (col("value") * 0.5 + col("w")).as("value"))
-    }(_ => 1L).state
-    val (planned, _) = arm(rebind = false)(bits(run(hintFrom = 2)))
-    val (rebound, steps) = arm(rebind = true)(bits(run(hintFrom = 2)))
-    assert(rebound == planned)
-    assert(steps.map(_.iter) == (1 to 5))
-    assert(!steps(1).rebound, "the superstep whose plan changed must be planned")
-    assert(steps.drop(2).forall(_.rebound), steps)
-    // the same loop without the change rebinds superstep 2
-    val (_, unchanged) = arm(rebind = true)(bits(run(hintFrom = 1)))
-    assert(unchanged.drop(1).forall(_.rebound), unchanged)
-  }
-
   test("an iteration-free loop builds its step once per leaf shape") {
     // superstep 1's leaf is the round-robin init, every later one is
     // hash-partitioned by the step: the step is built for supersteps 1 and 2
@@ -132,9 +111,11 @@ class RebindSpec extends SparkTestBase {
     // rounds = 8 plus the guard superstep
     ("Dedup.propagateCanonical", Some(9), Some(3),
       () => Dedup.propagateCanonical(chainPairs, (0L until 12L).toDF("doc_id"), rounds = 8)._1),
-    ("RandomWalks.deepWalk", Some(5), None, () => RandomWalks.deepWalk(edges, pathLength = 6)),
-    ("RandomWalks.node2vec", Some(4), None, () => RandomWalks.node2vec(edges, pathLength = 6)),
-    ("RandomWalks.metaPath2Vec", Some(5), None,
+    // the walks carry their step number in the state, so their supersteps
+    // rebind like any other loop's
+    ("RandomWalks.deepWalk", Some(5), Some(3), () => RandomWalks.deepWalk(edges, pathLength = 6)),
+    ("RandomWalks.node2vec", Some(4), Some(3), () => RandomWalks.node2vec(edges, pathLength = 6)),
+    ("RandomWalks.metaPath2Vec", Some(5), Some(3),
       () => RandomWalks.metaPath2Vec(edges, vertices, Seq("conv", "tool"), pathLength = 6)))
 
   for ((name, supersteps, settledFrom, run) <- runnerLoops)
@@ -156,14 +137,14 @@ class RebindSpec extends SparkTestBase {
   test("the superstep after a durable save reads the in-memory leaf, no file scan") {
     val root = Files.createTempDirectory("graft-rebind").toString
     val init = (1L to 20L).map(v => (v, v.toDouble, true)).toDF("vid", "value", "active")
-    val states = mutable.Map.empty[Int, DataFrame]
-    // numbered, so the step sees (and records) every superstep's state
-    val res = IterativeRunner.loopNumbered(init, maxIter = 4, truncateEvery = 2,
-      checkpointer = Some(new Checkpointer(spark, root, "r"))) { (state, iter) =>
-      states(iter) = state
-      state.select($"vid", ($"value" - 1.0).as("value"), ($"value" > 1.0).as("active"))
-    }(IterativeRunner.CountTrue("active"))
-    val afterSave = states(3).queryExecution.executedPlan
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val res = IterativeRunner.onPlan.withValue(plans += _) {
+      IterativeRunner.loop(init, maxIter = 4, truncateEvery = 2,
+        checkpointer = Some(new Checkpointer(spark, root, "r"))) { state =>
+        state.select($"vid", ($"value" - 1.0).as("value"), ($"value" > 1.0).as("active"))
+      }(IterativeRunner.CountTrue("active"))
+    }
+    val afterSave = plans(2)
     assert(afterSave.collect { case f: FileSourceScanExec => f }.isEmpty, afterSave.treeString)
     assert(res.metrics(2).rebound, res.metrics)
     assert(res.metrics.map(_.activeCount) == Seq(19L, 18L, 17L, 16L))

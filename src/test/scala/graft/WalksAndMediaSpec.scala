@@ -91,7 +91,7 @@ class RandomWalksSpec extends SparkTestBase {
     // deg 10^6) — this spec rejects that scheme
     val deg = 5000000L
     val draws = spark.range(0, 20000)
-      .select(RandomWalks.draw(col("id"), 1, lit(deg), 42L).cast("long").as("d"))
+      .select(RandomWalks.draw(col("id"), lit(1), lit(deg), 42L).cast("long").as("d"))
       .cache()
     val mx = draws.agg(max(col("d"))).head().getLong(0)
     val mn = draws.agg(min(col("d"))).head().getLong(0)
