@@ -4,12 +4,12 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Round-6 optimization lab: run named SparkEntry queries like QueryLab but
-  * with a SparkListener that attributes wall-clock to individual Spark jobs
-  * (per-job ms; still-running jobs marked, excluded from the sum) and
-  * prints every ≥200 ms stage with its task count — the sandbox stand-in
-  * for the Spark UI's job/stage pages (guide §1/§7: measure and attribute
-  * before changing anything). Usage:
+/** Per-query lab: time named SparkEntry queries in a fresh session under
+  * the Bench conditions (clearCache between runs, repeats to separate
+  * first-run JIT/IO from steady state), with a SparkListener that
+  * attributes wall-clock to individual Spark jobs (per-job ms; still-running
+  * jobs marked, excluded from the sum) and prints every ≥200 ms stage with
+  * its task count — the stand-in for the Spark UI's job/stage pages. Usage:
   *   runMain graft.OptLab q_ann_ivf[,q_x...] [sfDir] [reps]
   */
 object OptLab {

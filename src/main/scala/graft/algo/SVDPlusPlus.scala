@@ -13,11 +13,12 @@ import graft.core.IterativeRunner
   * a 16-rating dataset, `GraphTest.scala:172-188`).
   *
   * Spark-native re-expression: vertex state is a Dataset with Array[Double]
-  * factor columns; the two reference phases are two join-aggregate passes per
-  * iteration; element-wise array-sum aggregation is posexplode + two-level
-  * groupBy (skew-safe, no per-vertex map); BLAS daxpy/ddot become
-  * zip_with/aggregate column expressions. Factor init is hash-deterministic,
-  * not `new Random()` — runs are exactly reproducible.
+  * factor columns; the two reference phases form one join + aggregate
+  * superstep of [[IterativeRunner.loop]]; element-wise array-sum aggregation
+  * is posexplode + one hash aggregate (skew-safe, no per-vertex map); BLAS
+  * daxpy/ddot become zip_with and unrolled scalar column expressions. Factor
+  * init is hash-deterministic, not `new Random()` — runs are exactly
+  * reproducible.
   */
 object SVDPlusPlus {
 
@@ -48,14 +49,11 @@ object SVDPlusPlus {
   private def detRandArray(vid: Column, rank: Int, salt: Long): Column =
     transform(sequence(lit(0), lit(rank - 1)), i => detRand(vid, i, salt))
 
-  private def dotArr(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** [[dotArr]] unrolled to whole-stage-codegen scalar arithmetic — SAME
-    * left-to-right association starting from 0.0 (bit-identical doubles),
-    * but evaluated compiled instead of via the interpreted higher-order
-    * `aggregate(zip_with(...))`, which costs ~µs/row on the 600k-row edge
-    * pass (round 6). */
+  /** Dot product unrolled to whole-stage-codegen scalar arithmetic: the
+    * left-to-right sum from 0.0 of `aggregate(zip_with(a, b, *), 0.0, +)`
+    * (bit-identical doubles), evaluated compiled instead of via that
+    * interpreted higher-order form, which costs ~µs/row on the 600k-row
+    * edge pass. */
   private def dotFlat(a: Column, b: Column, rank: Int): Column =
     (0 until rank).foldLeft(lit(0.0))((acc, i) =>
       acc + element_at(a, i + 1) * element_at(b, i + 1))
@@ -69,17 +67,27 @@ object SVDPlusPlus {
     * once per row and is the optimizer barrier that stops CollapseProject
     * re-inlining it per dimension — a barrier-free
     * `sum(element_at(arr, i))` form was A/B-measured ~40% SLOWER for
-    * exactly that reason, and the original two-level
+    * exactly that reason, and a two-level
     * groupBy(vid,pos)→groupBy(vid)+collect_list-sort shape pays a second
-    * shuffle plus a per-vertex sort (×7 calls per run). One shuffle,
-    * map-side combine absorbs hub skew. */
+    * shuffle plus a per-vertex sort. One shuffle, map-side combine absorbs
+    * hub skew. */
   private def sumArrays(msgs: DataFrame, rank: Int): DataFrame =
     msgs.select(col("vid"), posexplode(col("arr")).as(Seq("pos", "v")))
       .groupBy("vid")
       .agg(array((0 until rank).map(i =>
         sum(when(col("pos") === i, col("v")))): _*).as("arr"))
 
-  /** @param ratings (src: user vid, dst: item vid, rating: double); user and
+  /** Runs `conf.maxIters` SGD supersteps through [[IterativeRunner.loop]]:
+    * each superstep is the reference's sumY phase and gradient phase as one
+    * join + aggregate plan over the vertex state.
+    *
+    * Building the result runs four actions before the returned frame is
+    * used: the global mean rating (which also fills the edge cache), the
+    * edge count, the vertex count (which materializes the initial state and
+    * sizes the join cutover) and the final squared-error sum (which
+    * materializes the supersteps).
+    *
+    * @param ratings (src: user vid, dst: item vid, rating: double); user and
     *                item id spaces must be disjoint (bipartite).
     */
   def run(ratings: DataFrame, conf: Conf = Conf()): Result = {
@@ -87,115 +95,99 @@ object SVDPlusPlus {
     val edges = ratings.select(col("src"), col("dst"), col("rating").cast("double"))
       .persist()
     val u = edges.agg(avg("rating")).head().getDouble(0)
-    // Round 6: the SGD loop is the same superstep grammar as the Pregel
-    // algos — it plans in a loop session whose shuffle width comes from the
-    // DATA (the widest intermediate is the 2-endpoint × rank gradient explode
-    // over the edge set) instead of the session constant. edges.count() is
-    // free: the mean aggregate above already materialized the edge cache.
-    val session = IterativeRunner.loopSession(spark,
-      Some(graft.core.IterCache.adaptiveParts(spark, edges.count() * 2L * conf.rank)))
-    val e = IterativeRunner.rebase(edges, session)
+    val n = edges.count()
 
     // init: bias = mean incident rating - u, norm = 1/sqrt(deg)  (reference
     // Graph.updateVertexAttr init, SVDPlusPlus.scala:32-38)
-    val incident = e.select(col("src").as("vid"), col("rating"))
-      .union(e.select(col("dst").as("vid"), col("rating")))
+    val incident = edges.select(col("src").as("vid"), col("rating"))
+      .union(edges.select(col("dst").as("vid"), col("rating")))
       .groupBy("vid").agg(count(lit(1)).as("deg"), avg("rating").as("meanr"))
-    var v = incident.select(
+    val init = incident.select(
       col("vid"),
       detRandArray(col("vid"), conf.rank, salt = 1L).as("p"),
       detRandArray(col("vid"), conf.rank, salt = 2L).as("y"),
       (col("meanr") - u).as("bias"),
       (lit(1.0) / sqrt(col("deg"))).as("norm"))
       .localCheckpoint(false)
-    // Round 6: the six edge⋈state joins below re-shuffled the WIDE edge
-    // side (600k rows × three rank-arrays ≈ 180 MB) once per join per
-    // iteration under the blanket shuffle_hash hint, while the vertex state
-    // is rating-vertex-sized. Pick broadcast when the MEASURED state SIZE
-    // is broadcast-safe, else keep shuffle_hash (never sort the edge side).
+    // The edge⋈state joins below would re-shuffle the WIDE edge side
+    // (600k rows × three rank-arrays ≈ 180 MB) once per join per superstep
+    // under a blanket shuffle_hash hint, while the vertex state is
+    // rating-vertex-sized. Pick broadcast when the MEASURED state SIZE is
+    // broadcast-safe, else keep shuffle_hash (never sort the edge side).
     // The cutover is in BYTES, not rows: every hinted side projects at most
     // two rank-length double arrays (users → pu, p2; v → qi, yi), one row
     // per vertex, so ~16·rank+64 B per row sizes the widest side. A
     // row-count cutover à la the (vid, key)-shaped dict joins would admit
-    // multi-hundred-MB broadcasts rebuilt per join per iteration. 64 MB
-    // keeps the build cheap at every rank. v is a leaf; the count doubles
-    // as its materializing action. With broadcast the edge cache is probed
-    // in place — zero edge shuffles per SGD iteration.
-    val stateBytesEst = v.count() * (16L * conf.rank + 64L)
+    // multi-hundred-MB broadcasts rebuilt per join per superstep. 64 MB
+    // keeps the build cheap at every rank. With broadcast the edge cache is
+    // probed in place — zero edge shuffles per superstep.
+    val stateBytesEst = init.count() * (16L * conf.rank + 64L)
     val stateHint = if (stateBytesEst <= (64L << 20)) "broadcast" else "shuffle_hash"
 
     def predicted(pu2: Column, qi: Column, bu: Column, bi: Column): Column = {
-      // codegen dot (same float sequence as dotArr — see dotFlat); evaluated
-      // once per edge row behind the `t` persist barrier
       val raw = lit(u) + bu + bi + dotFlat(qi, pu2, conf.rank)
       least(greatest(raw, lit(conf.minVal)), lit(conf.maxVal))
     }
 
-    for (_ <- 1 to conf.maxIters) {
-      // Phase 1 (reference sumY, SVDPlusPlus.scala:116-149): each user's
-      // implicit profile p2 = p + norm * Σ_{j∈N(u)} y_j
+    // Phase 1 (reference sumY, SVDPlusPlus.scala:116-149): the state with
+    // each user's implicit profile p2 = p + norm * Σ_{j∈N(u)} y_j
+    def withProfile(v: DataFrame): DataFrame = {
       val sumY = sumArrays(
-        e.join(v.select(col("vid").as("dst"), col("y")).hint(stateHint), "dst")
+        edges.join(v.select(col("vid").as("dst"), col("y")).hint(stateHint), "dst")
           .select(col("src").as("vid"), col("y").as("arr")),
         conf.rank)
-      val users = v.join(sumY, Seq("vid"), "left")
+      v.join(sumY, Seq("vid"), "left")
         .select(col("vid"), col("p"), col("y"), col("bias"), col("norm"),
           when(col("arr").isNull, col("p"))
             .otherwise(axpy(col("norm"), col("arr"), col("p"))).as("p2"))
+    }
 
-      // Phase 2 (reference trainF + reduceByKey + outerJoinVertices,
-      // SVDPlusPlus.scala:40-86,153-171): per-edge gradients, merged per vertex
-      val t = e
-        .join(users.select(col("vid").as("src"), col("p").as("pu"), col("p2"),
-          col("bias").as("bu"), col("norm").as("nu")).hint(stateHint), "src")
-        .join(v.select(col("vid").as("dst"), col("p").as("qi"), col("y").as("yi"),
-          col("bias").as("bi")).hint(stateHint), "dst")
-        .withColumn("err", col("rating") - predicted(col("p2"), col("qi"), col("bu"), col("bi")))
-        .persist()
+    // every rating with both endpoints' state and its prediction error
+    def rated(v: DataFrame): DataFrame = edges
+      .join(withProfile(v).select(col("vid").as("src"), col("p").as("pu"), col("p2"),
+        col("bias").as("bu"), col("norm").as("nu")).hint(stateHint), "src")
+      .join(v.select(col("vid").as("dst"), col("p").as("qi"), col("y").as("yi"),
+        col("bias").as("bi")).hint(stateHint), "dst")
+      .withColumn("err", col("rating") - predicted(col("p2"), col("qi"), col("bu"), col("bi")))
 
-      val g2 = lit(conf.gamma2)
-      // ONE message row per (edge, endpoint, dimension): explode the rank
-      // index FIRST and compute every gradient as SCALAR codegen arithmetic
-      // on the exploded row (round 6) — the previous form built dp/dy as
-      // interpreted zip_with ARRAYS per edge row and then exploded them,
-      // paying the interpreted-HOF tax (~µs per element) on 2·|E|·rank
-      // elements per iteration. Expression trees per element are IDENTICAL
-      // (g2·(err·q − γ7·p) etc., same association), so the SGD float
-      // sequence — and the q_svdpp oracle hash — is unchanged. dy stays
-      // item-side-only (null for users: the per-vid count(dyv)=0 below
-      // preserves the "no y update for users" contract), db is counted once
-      // per (edge, endpoint) via the pos=0 row.
-      val userRows = t
-        .select(col("src").as("vid"), col("err"), col("bu").as("bb"), col("pu"), col("qi"))
-        .select(col("vid"), col("err"), col("bb"), col("pu"),
-          posexplode(col("qi")).as(Seq("pos", "qv")))
+    // Phase 2 (reference trainF + reduceByKey + outerJoinVertices,
+    // SVDPlusPlus.scala:40-86,153-171): per-edge gradients, merged per vertex.
+    // ONE message row per (edge, endpoint, dimension): each rated edge is
+    // exploded into its two ends (the user's own factors pu against the
+    // item's qi; the item's own qi against the user's profile p2, plus the
+    // item-only y update), then the rank index is exploded and every
+    // gradient is SCALAR codegen arithmetic on the exploded row, not an
+    // interpreted zip_with array per edge row. Each edge row is read once,
+    // so its error is computed once without caching it. dy is null for
+    // users (the per-vid count(dyv)=0 below keeps the "no y update for
+    // users" contract); db is counted once per (edge, endpoint) via the
+    // pos=0 row.
+    val g2 = lit(conf.gamma2)
+    def step(v: DataFrame): DataFrame = {
+      val exploded = rated(v)
+        .select(col("err"), explode(array(
+          struct(col("src").as("vid"), col("bu").as("bb"), col("pu").as("own"),
+            col("qi").as("other"), lit(null).cast("double").as("nu"),
+            lit(null).cast("array<double>").as("yo")),
+          struct(col("dst").as("vid"), col("bi").as("bb"), col("qi").as("own"),
+            col("p2").as("other"), col("nu"), col("yi").as("yo")))).as("end"))
+        .select(col("err"), col("end.*"))
+        .select(col("vid"), col("err"), col("bb"), col("other"), col("nu"), col("yo"),
+          posexplode(col("own")).as(Seq("pos", "ov")))
         .select(col("vid"), col("pos"),
-          (g2 * (col("err") * col("qv")
-            - lit(conf.gamma7) * element_at(col("pu"), col("pos") + 1))).as("dpv"),
+          (g2 * (col("err") * element_at(col("other"), col("pos") + 1)
+            - lit(conf.gamma7) * col("ov"))).as("dpv"),
           when(col("pos") === 0,
             lit(conf.gamma1) * (col("err") - lit(conf.gamma6) * col("bb"))).as("db0"),
-          lit(null).cast("double").as("dyv"))
-      val itemRows = t
-        .select(col("dst").as("vid"), col("err"), col("bi").as("bb"), col("nu"),
-          col("p2"), col("yi"), col("qi"))
-        .select(col("vid"), col("err"), col("bb"), col("nu"), col("p2"), col("yi"),
-          posexplode(col("qi")).as(Seq("pos", "qv")))
-        .select(col("vid"), col("pos"),
-          (g2 * (col("err") * element_at(col("p2"), col("pos") + 1)
-            - lit(conf.gamma7) * col("qv"))).as("dpv"),
-          when(col("pos") === 0,
-            lit(conf.gamma1) * (col("err") - lit(conf.gamma6) * col("bb"))).as("db0"),
-          (g2 * (col("err") * col("nu") * col("qv")
-            - lit(conf.gamma7) * element_at(col("yi"), col("pos") + 1))).as("dyv"))
-      val exploded = userRows.unionByName(itemRows)
+          (g2 * (col("err") * col("nu") * col("ov")
+            - lit(conf.gamma7) * element_at(col("yo"), col("pos") + 1))).as("dyv"))
       val grads = exploded.groupBy("vid").agg(
         array((0 until conf.rank).map(i => sum(when(col("pos") === i, col("dpv")))): _*).as("dp"),
         sum(col("db0")).as("db"),
         when(count(col("dyv")) === 0, lit(null).cast("array<double>"))
           .otherwise(array((0 until conf.rank).map(i =>
             sum(when(col("pos") === i, col("dyv")))): _*)).as("dy"))
-
-      v = v.join(grads, Seq("vid"), "left")
+      v.join(grads, Seq("vid"), "left")
         .select(
           col("vid"),
           when(col("dp").isNull, col("p"))
@@ -204,26 +196,17 @@ object SVDPlusPlus {
             .otherwise(zip_with(col("y"), col("dy"), (a, b) => a + b)).as("y"),
           (col("bias") + coalesce(col("db"), lit(0.0))).as("bias"),
           col("norm"))
-        .localCheckpoint(false)
-      t.unpersist(false)
     }
 
+    // the widest exchange inside a superstep is the 2-endpoint × rank
+    // gradient explode over the edge set
+    val v = IterativeRunner.loop(init, conf.maxIters,
+      shuffleParts = Some(graft.core.IterCache.adaptiveParts(spark, n * 2L * conf.rank)))(
+      step)(_ => 1L).state
+
     // final error pass (reference testF, SVDPlusPlus.scala:89-112,175-180)
-    val sumY = sumArrays(
-      e.join(v.select(col("vid").as("dst"), col("y")).hint(stateHint), "dst")
-        .select(col("src").as("vid"), col("y").as("arr")), conf.rank)
-    val users = v.join(sumY, Seq("vid"), "left")
-      .select(col("vid"),
-        when(col("arr").isNull, col("p"))
-          .otherwise(axpy(col("norm"), col("arr"), col("p"))).as("p2"),
-        col("bias"))
-    val sqErr = e
-      .join(users.select(col("vid").as("src"), col("p2"), col("bias").as("bu")).hint(stateHint), "src")
-      .join(v.select(col("vid").as("dst"), col("p").as("qi"), col("bias").as("bi")).hint(stateHint), "dst")
-      .select(pow(col("rating") - predicted(col("p2"), col("qi"), col("bu"), col("bi")), 2).as("se"))
-      .agg(sum("se")).head().getDouble(0)
-    val n = e.count()
+    val sqErr = rated(v).select(pow(col("err"), 2).as("se")).agg(sum("se")).head().getDouble(0)
     edges.unpersist(false)
-    Result(IterativeRunner.rebase(v, spark), u, sqErr / n)
+    Result(v, u, sqErr / n)
   }
 }

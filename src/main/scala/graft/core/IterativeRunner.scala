@@ -21,9 +21,8 @@ final case class IterMetrics(iter: Int, activeCount: Long, wallMs: Long,
     planMs: Long = 0L, rebound: Boolean = false)
 
 /** Driver loop shared by every iterative algorithm (PageRank, both CC
-  * forms, LPA, k-core, HITS, shortest paths, the three walks and dedup's
-  * canonical propagation; SVD++'s SGD, which holds a cache inside each
-  * iteration, still drives its own loop): persist-swap state management,
+  * forms, LPA, k-core, HITS, shortest paths, the three walks, dedup's
+  * canonical propagation and SVD++'s SGD): persist-swap state management,
   * convergence action, and lineage truncation. The per-iteration body is
   * ONE declarative Catalyst plan (join → partial+final aggregate → join),
   * so whole-stage codegen applies to every superstep.
@@ -84,7 +83,7 @@ object IterativeRunner {
     * The caller's session is never changed, so queries running next to the
     * loop on it keep their own settings. Make one per loop call: a clone
     * does not see listeners registered on `spark` after it was made. */
-  private[graft] def loopSession(spark: SparkSession, parts: Option[Int]): SparkSession = {
+  private def loopSession(spark: SparkSession, parts: Option[Int]): SparkSession = {
     val child = GraftShim.cloneSession(spark)
     val conf = child.asInstanceOf[classic.SparkSession].sessionState.conf
     conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
@@ -98,7 +97,7 @@ object IterativeRunner {
 
   /** `df` as a frame of `session`: its analyzed plan, optimized and planned
     * under that session's settings. */
-  private[graft] def rebase(df: DataFrame, session: SparkSession): DataFrame =
+  private def rebase(df: DataFrame, session: SparkSession): DataFrame =
     if (df.sparkSession eq session) df else GraftShim.ofRows(session, df.queryExecution.analyzed)
 
   /** Runs supersteps until `maxIter` or until `activeCount` is 0. Every

@@ -44,7 +44,7 @@ object Sessions {
     * adds no per-session jars or files, and an isolated session runs its
     * tasks in an executor class loader of its own. Every superstep loop
     * plans in a session cloned from the caller's
-    * ([[IterativeRunner.loopSession]]), so with isolation each loop call
+    * ([[IterativeRunner.loop]]), so with isolation each loop call
     * compiled again the generated classes its tasks use (16 for a repeated
     * PageRank on the test graph) — the generated-class cache is keyed by
     * class loader. */

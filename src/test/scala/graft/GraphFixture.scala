@@ -26,6 +26,18 @@ object GraphFixture {
   lazy val vertexIds: Seq[Long] =
     graph.vertices.select("vid").collect().map(_.getLong(0)).sorted.toSeq
 
+  /** ALS-shaped synthetic ratings (users 1..20, items 101..115, planted
+    * low-rank structure), mirroring the reference's 16-line als-test.data
+    * smoke shape at slightly larger size. */
+  lazy val ratings: DataFrame = {
+    val rows = for {
+      user <- 1L to 20L
+      item <- 101L to 115L
+      if (user * 7 + item) % 3 != 0
+    } yield (user, item, 1.0 + ((user % 4) + (item % 3)) % 5) // structured in [1,5]
+    SparkTestBase.session.createDataFrame(rows).toDF("src", "dst", "rating")
+  }
+
   /** Symmetric adjacency map for oracles. */
   lazy val adj: Map[Long, Seq[Long]] = {
     val both = edgeList.flatMap { case (a, b) => Seq(a -> b, b -> a) }

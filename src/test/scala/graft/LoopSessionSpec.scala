@@ -181,17 +181,4 @@ class LoopSessionSpec extends SparkTestBase {
     assert(files.filter(p => lines(p).exists(_.contains("setConf("))).map(_.getFileName.toString) ==
       Seq("IterativeRunner.scala"))
   }
-
-  test("outside graft.core only SVD++ makes a loop session or rebases a frame") {
-    val root = Paths.get("src/main/scala/graft")
-    val core = root.resolve("core")
-    val callers = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(core))
-      .filter(p => Files.readAllLines(p).asScala
-        .exists(l => l.contains("loopSession(") || l.contains("rebase(")))
-      .map(_.getFileName.toString).toSeq
-    // every other loop runs through IterativeRunner.loop; SVD++'s SGD holds
-    // a cache inside each iteration, which the runner cannot release
-    assert(callers == Seq("SVDPlusPlus.scala"), callers)
-  }
 }

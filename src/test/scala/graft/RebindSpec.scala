@@ -9,7 +9,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
-import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, RandomWalks, ShortestPaths}
+import graft.algo.{ConnectedComponents, Hits, KCore, LabelPropagation, PageRank, RandomWalks, SVDPlusPlus,
+  ShortestPaths}
 import graft.core.{Checkpointer, IterCache, IterMetrics, IterativeRunner}
 import graft.dedup.Dedup
 
@@ -25,12 +26,15 @@ class RebindSpec extends SparkTestBase {
   private def landmarks = vertices.where(col("kind") === "tool" && pmod(col("vid"), lit(7L)) === 0L)
     .select("vid")
 
-  /** Rows in a canonical order, doubles by their bits. */
-  private def bits(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq.map {
+  /** Rows in a canonical order, doubles (also array elements) by their bits. */
+  private def bits(df: DataFrame): Seq[Seq[Any]] = {
+    def raw(x: Any): Any = x match {
       case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case s: Seq[_] => s.map(raw)
       case x => x
-    }).sortBy(_.mkString(","))
+    }
+    df.collect().toSeq.map(_.toSeq.map(raw)).sortBy(_.mkString(","))
+  }
 
   /** Runs `body` with the given planning mode; returns its result and the
     * metrics of every superstep it ran. */
@@ -116,7 +120,9 @@ class RebindSpec extends SparkTestBase {
     ("RandomWalks.deepWalk", Some(5), Some(3), () => RandomWalks.deepWalk(edges, pathLength = 6)),
     ("RandomWalks.node2vec", Some(4), Some(3), () => RandomWalks.node2vec(edges, pathLength = 6)),
     ("RandomWalks.metaPath2Vec", Some(5), Some(3),
-      () => RandomWalks.metaPath2Vec(edges, vertices, Seq("conv", "tool"), pathLength = 6)))
+      () => RandomWalks.metaPath2Vec(edges, vertices, Seq("conv", "tool"), pathLength = 6)),
+    ("SVDPlusPlus.run", Some(6), Some(3),
+      () => SVDPlusPlus.run(GraphFixture.ratings, SVDPlusPlus.Conf(rank = 4, maxIters = 6)).vertices))
 
   for ((name, supersteps, settledFrom, run) <- runnerLoops)
     test(s"$name runs through the runner: bit-identical with and without rebinding") {

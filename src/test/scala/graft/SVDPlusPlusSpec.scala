@@ -3,22 +3,7 @@ package graft
 import graft.algo.SVDPlusPlus
 
 class SVDPlusPlusSpec extends SparkTestBase {
-  import spark.implicits._
-
-  // ALS-shaped synthetic ratings (users 1..20, items 101..115, planted
-  // low-rank structure), mirroring the reference's 16-line als-test.data
-  // smoke shape at slightly larger size.
-  private lazy val ratings = {
-    val rows = for {
-      user <- 1L to 20L
-      item <- 101L to 115L
-      if (user * 7 + item) % 3 != 0
-    } yield {
-      val r = 1.0 + ((user % 4) + (item % 3)) % 5 // structured in [1,5]
-      (user, item, r)
-    }
-    rows.toDF("src", "dst", "rating")
-  }
+  import GraphFixture.ratings
 
   test("SVD++ squared error per edge within the reference's bound, and improving") {
     val conf = SVDPlusPlus.Conf(rank = 4, maxIters = 4)
