@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.derive.LinkGraph
 
-/** Prints the physical plans of the engine's hot paths for audit:
-  * parquet pushdown in the derivation scan, the PageRank superstep shape
-  * (exchange reuse, shuffle-hash joins, whole-stage codegen spans), and the
-  * triangle-count join. Findings are recorded in PLANS.md. */
+/** Prints the physical plans of the engine's non-loop hot paths for audit:
+  * parquet pushdown in the derivation scan, the text aggregates, the
+  * generic message operator, the sized wedge self-join and the corpus and
+  * session operators. Findings are recorded in PLANS.md. A superstep's
+  * plan is the one `IterativeRunner.onPlan` sees; `tools/dump_superstep.scala`
+  * prints it. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -26,21 +28,6 @@ object PlanAudit {
       .select("conv_id", "tool")
       .explain("formatted")
 
-    println("=== B. PageRank superstep (expect: adj InMemoryTableScan, ShuffledHashJoin, partial+final HashAggregate, NO BroadcastExchange) ===")
-    val g = LinkGraph.fromTranscripts(LinkGraph.transcriptsFromEvents(spark, sfDir))
-    val sym = LinkGraph.symmetrize(g.edges)
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val (adj, _) = graft.core.IterCache.byKey(
-      sym.join(deg, "src").select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("inv")), "src")
-    adj.count()
-    val state = adj.select(col("src").as("vid")).distinct()
-      .select(col("vid"), lit(1.0).as("pr")).localCheckpoint(true)
-    val msgs = adj.join(state.select(col("vid").as("src"), col("pr")).hint("shuffle_hash"), "src")
-      .groupBy(col("dst").as("vid")).agg(sum(col("pr") * col("inv")).as("msum"))
-    state.join(msgs.hint("shuffle_hash"), Seq("vid"), "left")
-      .select(col("vid"), (lit(0.15) * col("pr") + lit(0.85) * coalesce(col("msum"), lit(0.0))).as("pr"))
-      .explain("formatted")
-
     println("=== C. token stats over documents (expect single codegen span over the scan) ===")
     graft.text.TextStats.tokenCounts(spark.read.parquet(s"$sfDir/documents.parquet"))
       .explain("formatted")
@@ -48,6 +35,8 @@ object PlanAudit {
     println("=== D. vocab top-k (expect partial+final HashAggregate then TakeOrderedAndProject — no Window, no full Sort) ===")
     graft.text.TextStats.vocab(spark.read.parquet(s"$sfDir/documents.parquet"), 100)
       .explain("formatted")
+
+    val g = LinkGraph.fromTranscripts(LinkGraph.transcriptsFromEvents(spark, sfDir))
 
     println("=== E. generic aggregateMessages (expect two joins + Union + partial+final HashAggregate, no BroadcastExchange of state) ===")
     val amState = g.vertices.select(col("vid"), (pmod(col("vid"), lit(7L)) + 1L).as("w"))
@@ -71,61 +60,12 @@ object PlanAudit {
     graft.functions.Samplers.weightedKTyped(g.edges, g.vertices, 2)
       .explain("formatted")
 
-    println("=== H. wedge link-prediction, Adamic-Adar (expect self-join on ONE Exchange of the center key, partial+final HashAggregate on (a,b), post-agg minCommon Filter, shuffle-hash degree join) ===")
+    println("=== H. wedge link-prediction, Adamic-Adar (expect the IterCache.selfJoin shape: ONE sized Exchange of the center key reused by both sides, partial+final HashAggregate on (a,b), post-agg minCommon Filter, shuffle-hash degree join) ===")
     graft.algo.LinkPrediction.adamicAdar(g.edges, minCommon = 2L)
-      .explain("formatted")
-
-    println("=== I. k-core superstep (expect two left_semi ShuffledHashJoins on the cached sym, partial+final degree HashAggregate, one-column state left join — NO BroadcastExchange of state) ===")
-    val kAlive = g.vertices.select(col("vid"))
-    val kSym = LinkGraph.symmetrize(
-      g.edges.select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"))
-        .where(col("src") =!= col("dst")).distinct())
-    kSym
-      .join(kAlive.select(col("vid").as("src")).hint("shuffle_hash"), Seq("src"), "left_semi")
-      .join(kAlive.select(col("vid").as("dst")).hint("shuffle_hash"), Seq("dst"), "left_semi")
-      .groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-      .explain("formatted")
-
-    println("=== J. SSSP relaxation superstep (expect frontier-filtered state as the shuffle-hash build side, min partial+final HashAggregate, left join back to state) ===")
-    val sState = g.vertices.select(col("vid"),
-      when(pmod(col("vid"), lit(7L)) === 0, lit(0L)).as("dist"),
-      (pmod(col("vid"), lit(7L)) === 0).as("active"))
-    val sSym = g.edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .union(g.edges.select(col("dst").as("src"), col("src").as("dst"), lit(1L).as("w")))
-    val sMsgs = sSym
-      .join(sState.where(col("active")).select(col("vid").as("src"), col("dist"))
-        .hint("shuffle_hash"), "src")
-      .groupBy(col("dst").as("vid")).agg(min(col("dist") + col("w")).as("cand"))
-    sState.join(sMsgs, Seq("vid"), "left")
-      .select(col("vid"), least(col("dist"), col("cand")).as("dist"))
       .explain("formatted")
 
     println("=== K. tf-idf top-k (expect two partial+final HashAggregates, BroadcastExchange ONLY of the one-row count, Window partitioned BY DOC — no single-partition Sort) ===")
     graft.text.TextStats.tfidf(spark.read.parquet(s"$sfDir/documents.parquet"), 3)
-      .explain("formatted")
-
-    println("=== L. HITS half-superstep (expect edge join with shuffle-hash state build side, partial+final sum HashAggregate, BroadcastExchange ONLY of the one-row max) ===")
-    val hState = g.vertices.select(col("vid"), lit(1.0).as("hub"))
-    val hARaw = g.edges
-      .join(hState.select(col("vid").as("src"), col("hub")).hint("shuffle_hash"), "src")
-      .groupBy(col("dst").as("vid")).agg(sum(col("hub")).as("araw"))
-    g.vertices.select(col("vid"))
-      .join(hARaw.hint("shuffle_hash"), Seq("vid"), "left")
-      .crossJoin(broadcast(hARaw.agg(max(col("araw")).as("amax"))))
-      .select(col("vid"), coalesce(col("araw") / col("amax"), lit(0.0)).as("auth"))
-      .explain("formatted")
-
-    println("=== M. landmark-distance superstep (expect frontier-filtered shuffle-hash join, min HashAggregate keyed (vid,lm), full-outer fold — NO broadcast of state) ===")
-    val lmState = g.vertices.where(pmod(col("vid"), lit(7L)) === 0)
-      .select(col("vid"), col("vid").as("lm"), lit(0L).as("dist"), lit(true).as("active"))
-    val lmSym = LinkGraph.symmetrize(g.edges.select(col("src"), col("dst")))
-    val lmMsgs = lmSym
-      .join(lmState.where(col("active"))
-        .select(col("vid").as("src"), col("lm"), col("dist")).hint("shuffle_hash"), "src")
-      .groupBy(col("dst").as("vid"), col("lm")).agg(min(col("dist") + 1L).as("cand"))
-    lmState.join(lmMsgs, Seq("vid", "lm"), "full")
-      .select(col("vid"), col("lm"), least(col("dist"), col("cand")).as("dist"))
       .explain("formatted")
 
     println("=== N. assortativity (expect one degree HashAggregate, two vertex-sized shuffle-hash joins onto sym, single scalar HashAggregate — no window, no broadcast of degrees) ===")

@@ -55,19 +55,8 @@ object LinkPrediction {
           .where(col("cdeg") <= cap).select("src")
         s.join(ok, Seq("src"), "left_semi")
     }
-    // Wedge-output join sizing (round 6): the self-join emits exactly
-    // Σ_z deg(z)·(deg(z)−1)/2 rows — quadratic in center degree while the
-    // input is adjacency-sized, so AQE (partitioning by input bytes) runs
-    // the whole enumeration in 1-2 tasks. One degree-histogram aggregate
-    // gives the exact output size; partition the (ReusedExchange-shared)
-    // join side from it.
-    val wedgeRows = graft.core.IterCache.selfJoinOutputRows(
-      centers, Seq("src"), ordered = true)
-    val cs = centers.repartition(
-      graft.core.IterCache.adaptiveParts(s.sparkSession, wedgeRows), col("src"))
-    cs.as("x").join(cs.as("y"),
-        col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
-      .select(col("x.dst").as("a"), col("y.dst").as("b"), col("x.src").as("z"))
+    graft.core.IterCache.selfJoin(centers, Seq("src"), "dst", ordered = true).joined
+      .select(col("a.dst").as("a"), col("b.dst").as("b"), col("a.src").as("z"))
   }
 
   private def commonFrom(wedges: DataFrame, minCommon: Long): DataFrame =

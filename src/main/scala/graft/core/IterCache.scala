@@ -86,18 +86,32 @@ object IterCache {
     if (qe.toRdd.getNumPartitions >= parts) df else df.repartition(parts, col(key))
   }
 
-  /** Exact output row count of an equi-self-join of `df` on `keys` with an
-    * ordered (`a < b`, count/2) or unordered (`a =!= b`) pair condition:
-    * Σ_k c(k)·(c(k)−1) over the key histogram — ONE tiny aggregate. This is
-    * the sizing number AQE cannot see (it partitions by shuffle BYTES, and
-    * a bucket/shingle/wedge self-join's output is orders of magnitude
-    * larger than its input); feed it to [[adaptiveParts]] and repartition
-    * the join input explicitly (shared by the dedup/LSH/wedge joins). */
-  def selfJoinOutputRows(df: DataFrame, keys: Seq[String], ordered: Boolean): Long = {
+  /** A sized self-join and the key histogram that sized it: `pairs2` is
+    * Σ_k c(k)·(c(k)−1) and `rows` is Σ_k c(k), the input row count. */
+  final case class SelfJoin(joined: DataFrame, pairs2: Long, rows: Long)
+
+  /** The equi-self-join of `df` on `keys`, aliased `a` and `b`, with the
+    * pair condition `a.id < b.id` (`ordered`) or `a.id =!= b.id`, and its
+    * input partitioned for its OUTPUT size. The shingle, LSH bucket and
+    * wedge joins emit Σ_k c(k)·(c(k)−1) rows (halved when ordered), orders
+    * of magnitude more than their input bytes, so AQE, which sizes shuffle
+    * partitions by bytes, coalesces such a join into 1-2 tasks. One tiny
+    * aggregate over the key histogram (one action) gives the exact output
+    * size; [[adaptiveParts]] of it is the width of an explicit
+    * `repartition(keys)` that AQE keeps and both join sides share
+    * (ReusedExchange). The sizing spreads keys over tasks but does not split
+    * one key: a hub key's c² pairs still run in a single task. */
+  def selfJoin(df: DataFrame, keys: Seq[String], id: String, ordered: Boolean): SelfJoin = {
     import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
-    val pairs2 = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(col("c") * (col("c") - 1L)), lit(0L))).head().getLong(0)
-    if (ordered) pairs2 / 2L else pairs2
+    val hist = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum(col("c") * (col("c") - 1L)), lit(0L)),
+        coalesce(sum(col("c")), lit(0L))).head()
+    val pairs2 = hist.getLong(0)
+    val parts = adaptiveParts(df.sparkSession, if (ordered) pairs2 / 2L else pairs2)
+    val in = df.repartition(parts, keys.map(col): _*)
+    val pair = if (ordered) col(s"a.$id") < col(s"b.$id") else col(s"a.$id") =!= col(s"b.$id")
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && pair
+    SelfJoin(in.as("a").join(in.as("b"), on), pairs2, hist.getLong(1))
   }
 
   /** The cache itself: the DISK_ONLY leaf, hash-repartitioned by `key` and

@@ -4,14 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.algo.ConnectedComponents
+import graft.core.IterCache
 import graft.text.TextStats
 
 /** Document deduplication operators for a large-scale training-data pipeline:
   * exact (hash-group), n-gram Jaccard (shingle join), MinHash+LSH (the scale
   * path: signatures → bands → bucket join → verify) and SimHash (bit
-  * signature + banded Hamming search). All shuffle keys are content hashes —
-  * uniformly distributed by construction, so no skew handling is needed
-  * beyond Spark's partial aggregation.
+  * signature + banded Hamming search). Candidates come from self-joins on
+  * shingle or band-hash keys, and those keys are NOT uniform: a shingle or
+  * bucket shared by c documents puts all of its c·(c−1)/2 pairs in one
+  * join task. [[graft.core.IterCache.selfJoin]] sizes each such join from
+  * its exact output row count, so the pairs of different keys spread over
+  * enough tasks, but it does not yet split a single hub key across tasks.
   */
 object Dedup {
 
@@ -60,53 +64,34 @@ object Dedup {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = maxShingleDf match {
       case None =>
-        // The exact self-join emits Σ_s df(s)·(df(s)−1)/2 rows — orders of
-        // magnitude more than its INPUT bytes, so AQE (which sizes
-        // post-shuffle partitions from shuffle bytes) coalesces the whole
-        // join+partial-agg into ONE task (measured 13 s single-threaded on
-        // the sf0.1 trajectory corpus, round 6). The output size is exactly
-        // computable from the df histogram for the cost of one tiny
-        // aggregate, so partition the join side explicitly from it
-        // (guide §1 first-principles + §2.5): work-based, scale-adaptive,
-        // and an explicit repartition AQE will not coalesce away. Both join
-        // sides are the same exchange (ReusedExchange), and the pair
-        // partial-agg now runs in the parallel join stage.
-        val pairRows = graft.core.IterCache.selfJoinOutputRows(
-          sh, Seq("shingle"), ordered = true)
-        val parts = graft.core.IterCache.adaptiveParts(sh.sparkSession, pairRows)
-        val a = sh.repartition(parts, col("shingle"))
-        a.as("a")
-          .join(a.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+        IterCache.selfJoin(sh, Seq("shingle"), "doc_id", ordered = true).joined
           .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .agg(count(lit(1)).as("inter"))
       case Some(tau) =>
-        // candidate-join output is Σ_{df(s)≤τ} df·(df−1)/2 — exactly
-        // computable from the df histogram; partition for it (same AQE
-        // byte-blindness fix as the exact branch)
+        // the df histogram is a leaf: the semi-join reads it in the sizing
+        // aggregate and again in the candidate join
         val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
           .where(col("df") <= tau)
-          .localCheckpoint(false) // referenced by sizing + semi-join
-        val candRows = dfs.agg(coalesce(sum(col("df") * (col("df") - 1L)), lit(0L)))
-          .head().getLong(0) / 2L
+          .localCheckpoint(false)
         val rare = sh.join(dfs.select("shingle"), Seq("shingle"), "left_semi")
-          .repartition(graft.core.IterCache.adaptiveParts(sh.sparkSession, candRows),
-            col("shingle"))
-        val candidates = rare.as("a")
-          .join(rare.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+        val candidates = IterCache.selfJoin(rare, Seq("shingle"), "doc_id", ordered = true).joined
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .distinct()
         // exact |A∩B| verify over ALL shingles, candidates only
         exactInter(candidates, sh, sizes)
     }
+    jaccardOf(inter, sizes, minJaccard)
+  }
+
+  /** Jaccard of each (doc_a, doc_b, inter) pair from the per-doc shingle
+    * counts `sizes`: |A∩B| / (|A| + |B| − |A∩B|), kept when ≥ minJaccard. */
+  private def jaccardOf(inter: DataFrame, sizes: DataFrame, minJaccard: Double): DataFrame =
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
-  }
 
   /** MinHash signatures: numHashes universal-hash "permutations"
     * (a_i·fp + b_i mod P over a portable md5-derived shingle fingerprint —
@@ -133,7 +118,7 @@ object Dedup {
     // and the map-side partial aggregate stays (no added shuffle).
     // `knownShRows` lets minhashLsh share ONE count of the leaf.
     val shRows = knownShRows.getOrElse(sh.count())
-    val fps = graft.core.IterCache.widenIfNarrow(sh, shRows * numHashes, "doc_id")
+    val fps = IterCache.widenIfNarrow(sh, shRows * numHashes, "doc_id")
       .select(col("doc_id"), PortableHash.md5PackMod(col("shingle")).as("fp"))
     val aggs = (0 until numHashes).map(i =>
       min(PortableHash.universal(i, col("fp"))).as(s"mh$i"))
@@ -170,7 +155,7 @@ object Dedup {
           .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
         (leaf, n)
     }
-    val cparts = graft.core.IterCache.adaptiveParts(sh.sparkSession, interRows)
+    val cparts = IterCache.adaptiveParts(sh.sparkSession, interRows)
     val cand = if (cparts <= 1) candidates else candidates.repartition(cparts, col("doc_a"))
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
@@ -211,25 +196,13 @@ object Dedup {
       posexplode(array((0 until bands).map(b => bandHash(b, rows)): _*))
         .as(Seq("band", "bh")))
       .localCheckpoint(false)
-    // Same AQE blind spot as the exact shingle join above: bucket-collision
-    // output is Σ_{(band,bh)} c·(c−1)/2 rows — template-heavy corpora put
-    // hundreds of near-identical docs in one bucket, and AQE (sizing by the
-    // KB-scale banded table) runs the whole candidate join in 1-2 tasks.
-    // ONE tiny histogram aggregate over the leaf gives the exact candidate
-    // row count AND the doc count; everything downstream (the bucket join
-    // partitioning AND the verify-join partitioning via the candRows ×
-    // avg-shingles estimate) is sized from it with zero further actions.
-    val hist = banded.groupBy("band", "bh").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(col("c") * (col("c") - 1L)), lit(0L)).as("p2"),
-        coalesce(sum(col("c")), lit(0L)).as("rows")).head()
-    val candRows = hist.getLong(0) / 2L
-    val nDocs = math.max(1L, hist.getLong(1) / bands)
-    val bparts = graft.core.IterCache.adaptiveParts(docs.sparkSession, candRows)
-    val bd = banded.repartition(bparts, col("band"), col("bh"))
-    val candidates = bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
+    // The bucket histogram sizes the candidate join, and its row count
+    // (bands per doc) and pair count size the verify join below: no action
+    // beyond the join's own sizing aggregate.
+    val bucketJoin = IterCache.selfJoin(banded, Seq("band", "bh"), "doc_id", ordered = true)
+    val candRows = bucketJoin.pairs2 / 2L
+    val nDocs = math.max(1L, bucketJoin.rows / bands)
+    val candidates = bucketJoin.joined
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // verify candidates with exact Jaccard (join back to shingles)
@@ -240,12 +213,7 @@ object Dedup {
     // review finding)
     val inter = exactInter(candidates, sh, sizes,
       interRowsEst = Some(verifyRowsEstimate(candRows, nDocs, shRows)))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("na")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("nb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+    jaccardOf(inter, sizes, minJaccard)
   }
 
   /** Row estimate for the LSH verify join: candidate pairs, capped by the
@@ -354,7 +322,7 @@ object Dedup {
     val toks = docs.select(col("doc_id"), explode(TextStats.tokens).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
       .localCheckpoint(false)
-    val voted = graft.core.IterCache.widenIfNarrow(toks, toks.count() * 60L, "doc_id")
+    val voted = IterCache.widenIfNarrow(toks, toks.count() * 60L, "doc_id")
       .withColumn("h", PortableHash.md5Pack60(col("tok")))
     val votes = (0 until 60).map(j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(1L) === 1L, col("cnt"))
@@ -376,15 +344,7 @@ object Dedup {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("simhash"), b * 15).bitwiseAND(0x7fffL)): _*)).as(Seq("band", "bh")))
       .localCheckpoint(false)
-    // bucket-histogram join sizing, same rationale as minhashLsh (round 6)
-    val candRows = graft.core.IterCache.selfJoinOutputRows(
-      banded, Seq("band", "bh"), ordered = true)
-    val bd = banded.repartition(
-      graft.core.IterCache.adaptiveParts(docs.sparkSession, candRows), col("band"), col("bh"))
-    bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
+    IterCache.selfJoin(banded, Seq("band", "bh"), "doc_id", ordered = true).joined
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .distinct()

@@ -191,19 +191,8 @@ object Similarity {
         shiftright(col("rp_sig"), b * bandBits).bitwiseAND((1L << bandBits) - 1)): _*))
         .as(Seq("band", "bh")))
       .localCheckpoint(false)
-    // bucket-histogram join sizing (round 6): the bucket self-join emits
-    // Σ_(band,bh) c·(c−1) rows while its INPUT is a few bytes per vector, so
-    // AQE (byte-based) under-partitions it — partition from the exact output
-    // size instead (same fix as Dedup.minhashLsh; one tiny aggregate)
-    val candRows = graft.core.IterCache.selfJoinOutputRows(
-      banded, Seq("band", "bh"), ordered = false)
-    val bd = banded.repartition(
-      graft.core.IterCache.adaptiveParts(embeddings.sparkSession, candRows),
-      col("band"), col("bh"))
-    val cand = bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.vec_id") =!= col("b.vec_id"))
+    val cand = graft.core.IterCache.selfJoin(banded, Seq("band", "bh"), "vec_id", ordered = false)
+      .joined
       .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"))
       .distinct()
     exactCosineTopK(cand, embeddings, dim, k)
@@ -442,26 +431,13 @@ object Similarity {
       .agg(sum((col("xq") - col("cq")) * (col("xq") - col("cq"))).as("d"))
 
   /** Argmin cell per vector, declarative form — the ONE definition of the
-    * (d, cid) min-struct tie-break, shared by the production Lloyd loop and
-    * the IvfLab A/B arm (so the lab can never silently measure a different
-    * computation than ships). */
+    * (d, cid) min-struct tie-break (the reference the kernel path is
+    * spec-asserted against). */
   private def declarativeAssign(ex: DataFrame, cent: DataFrame): DataFrame =
     declarativeDists(ex, cent)
       .select(col("vec_id"), struct(col("d"), col("cid")).as("s"))
       .groupBy("vec_id").agg(min(col("s")).as("s"))
       .select(col("vec_id"), col("s.cid").as("cid"))
-
-  /** Lab hook ([[graft.IvfLab]]): ONE assignment pass of the Lloyd loop over
-    * the init centroids, in either form — the A/B surface for the
-    * declarative-vs-kernel assignment measurement. */
-  private[graft] def assignOnce(
-      embeddings: DataFrame, nlist: Int, kernel: Boolean, quant: Double = 1e6): DataFrame = {
-    val ex = quantExploded(embeddings, quant)
-    val cent = initCentroids(embeddings, ex, nlist)
-    if (kernel) kernelProbeRanks(quantVectors(embeddings, quant), cent, 1)
-      .select(col("vec_id"), col("cid"))
-    else declarativeAssign(ex, cent)
-  }
 
   private def ivfTopKDim(
       embeddings: DataFrame,
@@ -564,16 +540,8 @@ object Similarity {
         shiftright(col("rp_sig"), b * bandBits).bitwiseAND((1L << bandBits) - 1)): _*))
         .as(Seq("band", "bh")))
       .localCheckpoint(false) // self-joined twice, same rationale as annTopK
-    // bucket-histogram join sizing, same rationale as annTopKDim (round 6)
-    val candRows = graft.core.IterCache.selfJoinOutputRows(
-      banded, Seq("band", "bh"), ordered = true)
-    val bd = banded.repartition(
-      graft.core.IterCache.adaptiveParts(embeddings.sparkSession, candRows),
-      col("band"), col("bh"))
-    val cand = bd.as("a")
-      .join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val cand = graft.core.IterCache.selfJoin(banded, Seq("band", "bh"), "vec_id", ordered = true)
+      .joined
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
     val v = flat(embeddings, dim)

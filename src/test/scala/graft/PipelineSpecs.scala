@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.functions._
 
+import graft.algo.LinkPrediction
+import graft.core.IterCache
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.{CorpusOps, TextStats}
@@ -327,4 +331,60 @@ class TextStatsSpec extends SparkTestBase {
     // eval docs and sub-8-token docs are absent
     assert(!got.contains(0L) && !got.contains(3L))
   }
+}
+
+/** The one sized self-join ([[graft.core.IterCache.selfJoin]]) and the seven
+  * shingle, bucket and wedge joins built on it. */
+class SelfJoinSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** Partition counts of the join's input repartitions (one per side). */
+  private def inputParts(joined: DataFrame): Seq[Int] =
+    joined.queryExecution.analyzed.collect { case r: RepartitionByExpression => r.numPartitions }
+
+  for (hub <- Seq(200, 300); ordered <- Seq(true, false))
+    test(s"selfJoin histogram and width: hub key c = $hub, ordered = $ordered") {
+      // one hub key plus 300 singleton keys
+      val df = ((0 until hub).map(i => (0L, i.toLong)) ++ (1 to 300).map(k => (k.toLong, 0L)))
+        .toDF("k", "id")
+      val sj = IterCache.selfJoin(df, Seq("k"), "id", ordered)
+      val joinedRows = sj.joined.count()
+      assert(sj.pairs2 == hub.toLong * (hub - 1))
+      assert(sj.pairs2 == (if (ordered) 2L * joinedRows else joinedRows))
+      assert(sj.rows == df.count())
+      val parts = inputParts(sj.joined)
+      assert(parts.nonEmpty && parts.forall(_ == IterCache.adaptiveParts(spark, joinedRows)), parts)
+    }
+
+  test("selfJoin of an empty input: no rows, one partition") {
+    val sj = IterCache.selfJoin(Seq.empty[(Long, Long)].toDF("k", "id"), Seq("k"), "id", ordered = true)
+    assert(sj.joined.count() == 0L && sj.pairs2 == 0L && sj.rows == 0L)
+    assert(inputParts(sj.joined).forall(_ == 1))
+  }
+
+  private val text = (0 until 40).map(j => s"tok$j").mkString(" ")
+  private def docs(n: Int) = (0 until n).map(i => (i.toLong, text)).toDF("doc_id", "text")
+  private val vec = Array.tabulate(16)(i => math.sin(i + 1.0).toFloat)
+  private def vectors(n: Int) = (0 until n).map(i => (i.toLong, vec)).toDF("vec_id", "embedding")
+  /** A star of n leaves: every leaf pair shares the center. */
+  private def star(n: Int) = (1 to n).map(i => (0L, i.toLong)).toDF("src", "dst")
+
+  // (caller, input of n identical docs / vectors / star leaves, operator,
+  // rows over fifty): every pair of the fifty matches, so the count is the
+  // brute-force 50·49/2 pairs, or 50 queries × k = 10 for the top-k
+  private val callers: Seq[(String, Int => DataFrame, DataFrame => DataFrame, Long)] = Seq(
+    ("Dedup.ngramJaccard", docs, Dedup.ngramJaccard(_, 3, 0.5), 1225L),
+    ("Dedup.ngramJaccard(maxShingleDf)", docs,
+      Dedup.ngramJaccard(_, 3, 0.5, maxShingleDf = Some(1000L)), 1225L),
+    ("Dedup.minhashLsh", docs, Dedup.minhashLsh(_, 3, 64, 16, 0.5), 1225L),
+    ("Dedup.simhashPairs", docs, Dedup.simhashPairs(_, 3), 1225L),
+    ("Similarity.annTopK", vectors, Similarity.annTopK(_, 10), 500L),
+    ("Similarity.cosinePairsLsh", vectors, Similarity.cosinePairsLsh(_, 0.9), 1225L),
+    ("LinkPrediction.commonNeighbors", star, LinkPrediction.commonNeighbors(_), 1225L))
+
+  for ((name, input, op, fifty) <- callers)
+    test(s"$name over the sized self-join: empty input and fifty identical rows") {
+      assert(op(input(0)).count() == 0L)
+      assert(op(input(50)).count() == fifty)
+    }
 }
